@@ -202,3 +202,43 @@ def test_time_travel_reads_retained_versions(spark, tmp_path):
     store.release_leases()
     with pytest.raises(ValueError, match="not retained"):
         store.read(version=1)
+
+
+def test_merge_clauses_equal_sequential_writes(spark, tmp_path):
+    """One MERGE with delete and touch clauses equals delete_keys →
+    merge → update_keys applied in turn, published as one version."""
+    one = sync_state_store(spark, str(tmp_path / "one"))
+    seq = sync_state_store(spark, str(tmp_path / "seq"))
+    _seed(spark, one)
+    _seed(spark, seq)
+    later = datetime.datetime(2030, 6, 6)
+    updates = spark.createDataFrame(
+        [
+            _row(3, 0, status="pending", created_at=later),  # keeps its created_at
+            _row(4, 1, status="pending", created_at=later),  # deleted first: takes the new one
+            _row(70, 0, status="new", created_at=later),  # inserted
+        ],
+        SYNC_STATE_SCHEMA,
+    )
+    deletes = spark.createDataFrame(
+        [("local", 4, 1), ("local", 5, 0)], "target string, product_id long, chunk_index int"
+    )
+    touches = spark.createDataFrame([("local", 3), ("local", 9)], "target string, product_id long")
+    assign = {"error_code": F.lit("touched")}
+
+    v = one.current_version()
+    before = _manifest(one)
+    one.merge(updates, delete=deletes, touch=(touches, assign))
+    assert one.current_version() == v + 1
+    seq.delete_keys(deletes, ["target", "product_id", "chunk_index"])
+    seq.merge(updates)
+    seq.update_keys(touches, assign, key_cols=["target", "product_id"])
+
+    got = sorted(tuple(r) for r in one.read().collect())
+    assert got == sorted(tuple(r) for r in seq.read().collect())
+    assert len(got) == 120  # -2 deleted, +1 re-inserted, +1 inserted
+    row = one.read().filter("product_id = 3 AND chunk_index = 0").first()
+    assert (row.status, row.error_code, row.created_at) == ("pending", "touched", datetime.datetime(2026, 1, 1))
+    # only the buckets of products 3, 4, 5, 9 and 70 were rewritten
+    after = _manifest(one)
+    assert 1 <= len([b for b in set(before) | set(after) if before.get(b) != after.get(b)]) <= 5

@@ -107,10 +107,10 @@ def embed_texts(
     """
     if on_error not in ("raise", "mark"):
         raise ValueError("on_error must be 'raise' or 'mark'")
+    from wc_vector_indexing_spark.functions.partitioning import fan_out
+
     backend = backend or DeterministicEmbedder()
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < max(2, target // 2):
-        df = df.repartition(target)
+    df = fan_out(df)
     fields = list(df.schema.fields) + [
         T.StructField(out_col, T.ArrayType(T.FloatType()), True)
     ]

@@ -33,10 +33,14 @@ leaves only orphan files for vacuum. Vacuum is reference-counted: a
 data dir survives as long as ANY retained or leased manifest references
 a file inside it.
 
-Operations that cannot name their keys (``delete_where`` /
-``update_where`` with arbitrary predicates, ``overwrite``) take the
-documented slow path — a full-table rewrite — exactly as Delta does
-when a predicate prunes nothing.
+``merge`` takes Delta-style clauses — delete keys (WHEN MATCHED
+DELETE), updates (WHEN MATCHED UPDATE / NOT MATCHED INSERT), touch keys
+with assignments (WHEN MATCHED UPDATE SET) — as one bucket rewrite and
+one version; ``delete_keys`` and ``update_keys`` are its one-clause
+forms. Only operations that cannot name their keys (``delete_where`` /
+``update_where`` with arbitrary predicates such as a site purge,
+``overwrite``) take the slow path — a full-table rewrite — exactly as
+Delta does when a predicate prunes nothing.
 
 The SYNC_STATE schema mirrors the reference DDL (class-plugin.php:107-131,
 FIXTURES.md §8); unique keys (target, product_id, chunk_index) /
@@ -54,6 +58,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 SYNC_STATE_SCHEMA = T.StructType(
     [
@@ -174,58 +179,50 @@ class ParquetMergeStore:
     def _bucket_expr(self) -> F.Column:
         return F.pmod(F.xxhash64(*[F.col(c) for c in self.bucket_cols]), F.lit(self.n_buckets))
 
-    def _files_of(self, manifest: dict[int, list[str]], buckets=None) -> list[str]:
-        out: list[str] = []
-        for b, files in sorted(manifest.items()):
-            if buckets is None or b in buckets:
-                out.extend(os.path.join(self.root, f) for f in files)
-        return out
-
-    def _read_files(self, files: list[str]) -> DataFrame:
-        if not files:
-            return self.spark.createDataFrame([], self.schema)
-        return self.spark.read.schema(self.schema).parquet(*files)
-
-    def _read_buckets(self, buckets: set[int]) -> DataFrame:
-        """Current snapshot restricted to ``buckets`` — file-list
-        pruning via the manifest (the Delta-style partition prune that
-        makes MERGE cost ∝ touched buckets). Legacy snapshots fall back
-        to a full scan + bucket filter."""
-        v = self.current_version()
+    def _scan(self, v: int, buckets: set[int] | None = None) -> DataFrame:
+        """Snapshot ``v`` (leased), restricted to ``buckets`` if given —
+        file-list pruning via the manifest (the Delta-style partition
+        prune that makes MERGE cost ∝ touched buckets). A legacy
+        snapshot falls back to a full scan + bucket filter."""
         if v == 0:
             return self.spark.createDataFrame([], self.schema)
         self._leased.add(v)
         manifest = self._manifest(v)
-        if manifest is None:  # legacy layout: no file-level pruning
+        if manifest is None:  # legacy snapshot written pre-manifest
             df = self.spark.read.schema(self.schema).parquet(self._version_dir(v))
-            return df.filter(self._bucket_expr().isin(*[int(b) for b in buckets]))
-        return self._read_files(self._files_of(manifest, buckets))
+            return df if buckets is None else df.filter(self._bucket_expr().isin(*buckets))
+        files = [
+            os.path.join(self.root, f)
+            for b, fs in sorted(manifest.items())
+            if buckets is None or b in buckets
+            for f in fs
+        ]
+        if not files:
+            return self.spark.createDataFrame([], self.schema)
+        return self.spark.read.schema(self.schema).parquet(*files)
 
-    def _write_buckets(self, df: DataFrame, v: int, n_touched: int) -> dict[int, list[str]]:
-        """Write ``df`` into a fresh immutable data dir, one hive level
-        per bucket, and return the bucket -> relative-file mapping.
-        Hash-repartitioned on the bucket column first so each bucket is
-        written by exactly one task (no small-file fan-out)."""
+    def _bucketed(self, df: DataFrame, n_touched: int) -> DataFrame:
+        """``df`` with its bucket column ``__b``, hash-repartitioned on it
+        so each bucket is written by exactly one task (no small-file
+        fan-out)."""
+        df = df.withColumn("__b", self._bucket_expr())
+        return df.repartition(max(1, min(n_touched, 32)), "__b")
+
+    def _write_buckets(self, df: DataFrame, v: int) -> dict[int, list[str]]:
+        """Write ``df`` (from ``_bucketed``) into a fresh immutable data
+        dir, one hive level per bucket, and return the bucket ->
+        relative-file mapping."""
         ddir = os.path.join(self.root, f"d{v:08d}")
-        (
-            df.withColumn("__b", self._bucket_expr())
-            .repartition(max(1, min(n_touched, 32)), "__b")
-            .write.mode("overwrite")
-            .partitionBy("__b")
-            .parquet(ddir)
-        )
-        mapping: dict[int, list[str]] = {}
-        for name in os.listdir(ddir):
-            if not name.startswith("__b="):
-                continue
-            b = int(name.split("=", 1)[1])
-            bdir = os.path.join(ddir, name)
-            mapping[b] = sorted(
+        df.write.mode("overwrite").partitionBy("__b").parquet(ddir)
+        return {
+            int(name.split("=", 1)[1]): sorted(
                 os.path.join(f"d{v:08d}", name, f)
-                for f in os.listdir(bdir)
+                for f in os.listdir(os.path.join(ddir, name))
                 if f.endswith(".parquet")
             )
-        return mapping
+            for name in os.listdir(ddir)
+            if name.startswith("__b=")
+        }
 
     def _flip(self, v: int, manifest: dict[int, list[str]]) -> int:
         os.makedirs(self._version_dir(v), exist_ok=True)
@@ -244,33 +241,17 @@ class ParquetMergeStore:
         self._vacuum(keep=3)
         return v
 
-    def _publish_full(self, df: DataFrame) -> int:
-        """Slow path: full-table rewrite (overwrite / arbitrary-predicate
-        updates — the no-pruning case, same cost as Delta without a
-        matching predicate)."""
+    def _publish(self, df: DataFrame, touched: set[int] | None = None) -> int:
+        """Publish the next version. Slow path, ``touched`` None: ``df``
+        is the whole table. Fast path: ``df`` (from ``_bucketed``) holds
+        the complete new contents of exactly the ``touched`` buckets, and
+        every other bucket's files carry over by reference (not read,
+        copied or rewritten)."""
         v = self.current_version() + 1
-        mapping = self._write_buckets(df, v, self.n_buckets)
-        return self._flip(v, mapping)
-
-    def _publish_buckets(self, df_touched: DataFrame, touched: set[int]) -> int:
-        """Fast path: ``df_touched`` holds the complete new contents of
-        exactly the ``touched`` buckets; every other bucket's manifest
-        entry carries over unchanged (its data files are not read,
-        copied, or rewritten)."""
-        base = self._manifest(self.current_version()) or {}
-        v = self.current_version() + 1
-        mapping = self._write_buckets(df_touched, v, len(touched))
-        merged = {b: files for b, files in base.items() if b not in touched}
-        merged.update(mapping)
-        return self._flip(v, merged)
-
-    def _touched_buckets(self, keyed_df: DataFrame) -> set[int]:
-        """Distinct buckets hit by a key frame — bounded by n_buckets,
-        so the collect is a ≤n_buckets-row aggregate, never row data."""
-        rows = (
-            keyed_df.select(self._bucket_expr().alias("__b")).distinct().collect()
-        )
-        return {int(r["__b"]) for r in rows}
+        if touched is None:
+            return self._flip(v, self._write_buckets(self._bucketed(df, self.n_buckets), v))
+        merged = {b: fs for b, fs in (self._manifest(v - 1) or {}).items() if b not in touched}
+        return self._flip(v, {**merged, **self._write_buckets(df, v)})
 
     def _is_legacy(self) -> bool:
         v = self.current_version()
@@ -319,18 +300,12 @@ class ParquetMergeStore:
         a version leases it, protecting it from vacuum until
         release_leases()."""
         v = self.current_version() if version is None else version
-        if v == 0:
-            return self.spark.createDataFrame([], self.schema)
-        if version is not None and not os.path.isdir(self._version_dir(v)):
+        if v and version is not None and not os.path.isdir(self._version_dir(v)):
             raise ValueError(
                 f"version {v} not retained (vacuum keeps the newest 3 "
                 "plus leased snapshots)"
             )
-        self._leased.add(v)
-        manifest = self._manifest(v)
-        if manifest is None:  # legacy snapshot written pre-manifest
-            return self.spark.read.schema(self.schema).parquet(self._version_dir(v))
-        return self._read_files(self._files_of(manifest))
+        return self._scan(v)
 
     def versions(self) -> list[int]:
         """Retained snapshot versions, oldest first (≙ DESCRIBE HISTORY)."""
@@ -347,106 +322,144 @@ class ParquetMergeStore:
     # -- writes ------------------------------------------------------------
 
     def overwrite(self, df: DataFrame) -> int:
-        return self._publish_full(self._conform(df))
+        return self._publish(self._conform(df))
 
-    def merge(self, updates: DataFrame, immutable_cols: tuple[str, ...] = ("created_at",)) -> int:
-        """MERGE: WHEN MATCHED UPDATE all columns (except immutables,
-        which keep the target's value), WHEN NOT MATCHED INSERT.
+    def merge(
+        self,
+        updates: DataFrame | None,
+        immutable_cols: tuple[str, ...] = ("created_at",),
+        delete: DataFrame | None = None,
+        touch: tuple[DataFrame, dict[str, F.Column]] | None = None,
+        buckets: set[int] | None = None,
+    ) -> int:
+        """MERGE INTO as one version, equal to ``delete_keys`` → upsert →
+        ``update_keys`` in turn: ``delete`` keys (WHEN MATCHED DELETE),
+        ``updates`` (WHEN MATCHED UPDATE all but the immutables, which
+        keep the target's value; WHEN NOT MATCHED INSERT), ``touch`` =
+        (keys, assignments) (WHEN MATCHED UPDATE SET). Cost ∝ touched
+        buckets (W1 at 100 TB = a per-product rewrite, not a table one).
 
-        ``updates`` must be unique on ``self.keys`` — enforced here with
-        a hard error rather than silently keeping one row (SURVEY §7.4
-        risk 4: nondeterministic dedupe would poison fingerprint state).
-
-        Cost ∝ touched buckets: only buckets the update keys hash into
-        are read and rewritten (W1 at 100 TB = a per-product bucket
-        rewrite, not a table rewrite)."""
-        updates = self._conform(updates).cache()
-        dup = updates.groupBy(*self.keys).count().filter(F.col("count") > 1)
-        if dup.limit(1).count() > 0:
-            sample = [r.asDict() for r in dup.limit(3).collect()]
-            raise ValueError(f"merge updates not unique on {self.keys}: {sample}")
-
-        touched = self._touched_buckets(updates)
-        if not touched:  # empty update batch: MERGE is a no-op
-            return self.current_version()
-        current = self._read_buckets(touched)
-        immutable_cols = tuple(c for c in immutable_cols if c in current.columns)
-        if immutable_cols:
-            preserved = current.select(
-                *self.keys, *[F.col(c).alias(f"__old_{c}") for c in immutable_cols]
-            )
-            updates = updates.join(preserved, self.keys, "left")
-            for c in immutable_cols:
-                updates = updates.withColumn(c, F.coalesce(F.col(f"__old_{c}"), F.col(c))).drop(
-                    f"__old_{c}"
+        ``updates`` must be unique on ``self.keys``: a hard error, not a
+        silent pick (SURVEY §7.4 risk 4: nondeterministic dedupe would
+        poison fingerprint state). A caller passing ``buckets`` (all its
+        clauses touch) has checked that in its own action."""
+        if buckets is not None:
+            return self._rewrite(buckets, updates, delete, touch, immutable_cols)
+        updates = self._conform(updates).cache() if updates is not None else None
+        try:
+            touched: set[int] | None = set()
+            if updates is not None:
+                stats = (
+                    updates.groupBy(self._bucket_expr().alias("__b"))
+                    .agg(F.count("*").alias("n"), F.count_distinct(F.struct(*self.keys)).alias("k"))
+                    .collect()
                 )
-        untouched = current.join(updates.select(*self.keys), self.keys, "left_anti")
-        merged = untouched.unionByName(self._conform(updates))
-        if self._is_legacy():
-            # one-time layout migration: the old snapshot has no
-            # bucket->file mapping, so untouched buckets can't carry
-            # over by reference — rewrite everything once
-            rest = self.read().filter(~self._bucket_expr().isin(*[int(b) for b in touched])) \
-                if touched else self.spark.createDataFrame([], self.schema)
-            return self._publish_full(merged.unionByName(rest))
-        return self._publish_buckets(merged, touched)
+                if any(r["n"] != r["k"] for r in stats):
+                    raise ValueError(f"merge updates not unique on {self.keys}")
+                touched = {int(r["__b"]) for r in stats}
+            for keys in (delete, touch and touch[0]):
+                if keys is not None:
+                    hit = self._key_buckets(keys)
+                    touched = None if hit is None or touched is None else touched | hit
+            return self._rewrite(touched, updates, delete, touch, immutable_cols)
+        finally:
+            if updates is not None:
+                updates.unpersist()
 
     def delete_where(self, condition) -> int:
-        """DELETE FROM t WHERE condition (anti-filter rewrite, W2).
-        Arbitrary predicate ⇒ no bucket pruning ⇒ full rewrite (the
-        Delta no-matching-predicate slow path)."""
-        return self._publish_full(self.read().filter(~condition))
+        """DELETE FROM t WHERE condition, for arbitrary predicates such
+        as a site purge (W2). No bucket pruning ⇒ full rewrite (the Delta
+        no-matching-predicate slow path)."""
+        return self._publish(self.read().filter(~condition))
 
-    def delete_keys(self, keys_df: DataFrame, key_cols: list[str] | None = None) -> int:
-        """DELETE rows whose key tuple appears in ``keys_df`` (anti-join
-        rewrite of `WHERE (k1,k2) IN (...)`, W2). Distributed — no
-        driver-side key collection. Bucket-pruned whenever the key frame
-        carries the bucket columns."""
-        key_cols = key_cols or self.keys
-        keys_only = keys_df.select(*key_cols).distinct()
-        if set(self.bucket_cols) <= set(key_cols) and not self._is_legacy():
-            touched = self._touched_buckets(keys_only)
-            if not touched:
-                return self.current_version()
-            remaining = self._read_buckets(touched).join(keys_only, key_cols, "left_anti")
-            return self._publish_buckets(remaining, touched)
-        return self._publish_full(self.read().join(keys_only, key_cols, "left_anti"))
+    def delete_keys(
+        self, keys_df: DataFrame, key_cols: list[str] | None = None, buckets: set[int] | None = None
+    ) -> int:
+        """DELETE rows whose key tuple appears in ``keys_df`` (`WHERE
+        (k1,k2) IN (...)`, W2). Distributed — no driver-side key
+        collection. Bucket-pruned whenever the key frame carries the
+        bucket columns; ``buckets``, if known, saves the bucket collect."""
+        keys = keys_df.select(*(key_cols or self.keys))
+        return self._rewrite(self._key_buckets(keys, buckets), delete=keys)
 
     def update_where(self, condition, assignments: dict[str, F.Column]) -> int:
         """UPDATE t SET ... WHERE condition (W3/W4 error-marking and
         timestamp-touch writes). Arbitrary predicate ⇒ full rewrite."""
-        current = self.read()
-        updated = current
+        updated = self.read()
         for col, expr in assignments.items():
             updated = updated.withColumn(col, F.when(condition, expr).otherwise(F.col(col)))
-        return self._publish_full(updated)
+        return self._publish(updated)
 
     def update_keys(
         self, keys_df: DataFrame, assignments: dict[str, F.Column], key_cols: list[str]
     ) -> int:
-        """UPDATE rows whose key tuple appears in ``keys_df`` — the
-        distributed form of `UPDATE ... WHERE key IN (...)`: a left-semi
-        marker join instead of a driver-side id list, so a corpus-wide
-        timestamp touch never collects keys. Bucket-pruned when the key
-        frame carries the bucket columns."""
-        keys_only = keys_df.select(*key_cols).distinct()
-        prune = set(self.bucket_cols) <= set(key_cols) and not self._is_legacy()
-        if prune:
-            touched = self._touched_buckets(keys_only)
-            if not touched:
-                return self.current_version()
-            current = self._read_buckets(touched)
-        else:
-            current = self.read()
-        marker = keys_only.withColumn("__hit", F.lit(True))
-        updated = current.join(marker, key_cols, "left")
-        cond = F.col("__hit").isNotNull()
-        for col, expr in assignments.items():
-            updated = updated.withColumn(col, F.when(cond, expr).otherwise(F.col(col)))
-        updated = updated.drop("__hit")
-        if prune:
-            return self._publish_buckets(updated, touched)
-        return self._publish_full(updated)
+        """UPDATE rows whose key tuple appears in ``keys_df`` — `UPDATE
+        ... WHERE key IN (...)` without a driver-side id list, so a
+        corpus-wide timestamp touch never collects keys. Bucket-pruned
+        when the key frame carries the bucket columns."""
+        keys = keys_df.select(*key_cols)
+        return self._rewrite(self._key_buckets(keys), touch=(keys, assignments))
+
+    def _key_buckets(self, keys: DataFrame, buckets: set[int] | None = None) -> set[int] | None:
+        """The buckets a key frame touches (a ≤n_buckets-row collect,
+        never row data), or None when it cannot be pruned: no bucket
+        columns in the keys, or a legacy snapshot."""
+        if not set(self.bucket_cols) <= set(keys.columns) or self._is_legacy():
+            return None
+        if buckets is None:
+            buckets = {int(r[0]) for r in keys.select(self._bucket_expr()).distinct().collect()}
+        return buckets
+
+    def _rewrite(
+        self,
+        touched: set[int] | None,
+        updates: DataFrame | None = None,
+        delete: DataFrame | None = None,
+        touch: tuple[DataFrame, dict[str, F.Column]] | None = None,
+        immutable_cols: tuple[str, ...] = (),
+    ) -> int:
+        """The one keyed write: the ``touched`` buckets' rows and every
+        clause's rows are unioned and hash-partitioned on the bucket (as
+        the write needs anyway); each clause finds its matches with a
+        window over (bucket, keys), which that partitioning satisfies:
+        one shuffle, one write. ``touched`` None (keys without the bucket
+        columns) or a legacy snapshot (no bucket->file mapping to carry
+        untouched buckets over) rewrites the whole table."""
+        if touched is not None and not touched:  # nothing matched: no-op
+            return self.current_version()
+        full = touched is None or self._is_legacy()
+        src = F.col("__src")
+        rows = self._scan(self.current_version(), None if full else touched)
+        rows = rows.withColumn("__src", F.lit(0))
+        clauses = (None if updates is None else self._conform(updates), delete, touch and touch[0])
+        for i, df in enumerate(clauses, 1):
+            if df is not None:
+                rows = rows.unionByName(df.withColumn("__src", F.lit(i)), allowMissingColumns=True)
+        if not full:
+            rows = self._bucketed(rows, len(touched))
+        bucket = [] if full else ["__b"]
+
+        def matched(i: int, cols: list[str]) -> F.Column:  # a clause-i row shares these keys
+            return F.max(src == i).over(Window.partitionBy(*bucket, *cols))
+
+        kept = (src != 0) | ~F.col("__hit")  # drops a matched target row
+        if delete is not None:
+            rows = rows.withColumn("__hit", matched(2, delete.columns)).filter(kept)
+        if updates is not None:
+            by_key = Window.partitionBy(*bucket, *self.keys)
+            for c in set(immutable_cols) & set(self.schema.fieldNames()):
+                old = F.coalesce(F.max(F.when(src == 0, F.col(c))).over(by_key), F.col(c))
+                rows = rows.withColumn(c, F.when(src == 1, old).otherwise(F.col(c)))
+            rows = rows.withColumn("__hit", matched(1, self.keys)).filter(kept)
+        if touch is not None:
+            rows = rows.withColumn("__hit", matched(3, touch[0].columns))
+            for col, expr in touch[1].items():
+                hit = expr.cast(self.schema[col].dataType)
+                rows = rows.withColumn(col, F.when(F.col("__hit"), hit).otherwise(F.col(col)))
+        out = rows.filter(src <= 1).select(
+            *[F.col(f.name).cast(f.dataType) for f in self.schema], *bucket
+        )
+        return self._publish(out, None if full else touched)
 
     # -- helpers -----------------------------------------------------------
 

@@ -81,21 +81,24 @@ def start_incremental_stream(
 
     def process_batch(batch: DataFrame, epoch_id: int) -> None:
         batch = batch.cache()
-        deletes = [
-            r.product_id
-            for r in batch.filter(F.col("change_type").isin("trash", "delete"))
-            .select("product_id")
-            .distinct()
-            .collect()
-        ]
-        if deletes:
-            delete_products(deletes, state_store, index_store, targets=config.targets)
-        upsert_ids = batch.filter(~F.col("change_type").isin("trash", "delete")).select(
-            "product_id"
-        ).distinct()
-        todo = products.join(upsert_ids, "product_id", "left_semi")
-        if todo.limit(1).count() > 0:
-            sync_products(todo, state_store, index_store, config, backend, text_col=text_col)
+        try:
+            deletes = [
+                r.product_id
+                for r in batch.filter(F.col("change_type").isin("trash", "delete"))
+                .select("product_id")
+                .distinct()
+                .collect()
+            ]
+            if deletes:
+                delete_products(deletes, state_store, index_store, targets=config.targets)
+            upsert_ids = batch.filter(~F.col("change_type").isin("trash", "delete")).select(
+                "product_id"
+            ).distinct()
+            todo = products.join(upsert_ids, "product_id", "left_semi")
+            if todo.limit(1).count() > 0:
+                sync_products(todo, state_store, index_store, config, backend, text_col=text_col)
+        finally:
+            batch.unpersist()
 
     # update mode: append would hold the last window open until a later
     # event advances the watermark past it — with AvailableNow catch-up
