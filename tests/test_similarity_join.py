@@ -106,11 +106,34 @@ def test_string_ids_schema_derived(spark):
 
 
 def test_empty_query_frame_keeps_schema(spark):
-    queries = _emb(spark, 5, seed=1).filter("vec_id < 0")
-    index = _emb(spark, 10, seed=2)
+    """Every probe-batch caller returns its non-empty schema (rank
+    included) when the query side has no rows; search_batch, whose
+    queries are a driver list, rejects an empty batch instead."""
+    from wc_vector_indexing_spark.operators.ivf import IVFIndex, search_batch
+    from wc_vector_indexing_spark.operators.similarity import (
+        hard_negatives,
+        hard_negatives_batched,
+        matryoshka_topk,
+    )
+
+    index = _emb(spark, 10, seed=2).withColumn("label", F.lit(0))
+    queries = index.filter("vec_id < 0")
     out = knn_similarity_join(queries, index, k=3)
-    assert out.count() == 0
     assert out.columns == ["query_id", "neighbor_id", "score", "rank"]
+    calls = {
+        "knn_similarity_join": lambda q: knn_similarity_join(q, index, k=3),
+        "matryoshka_topk": lambda q: matryoshka_topk(q, index, dims=[3, 6], k=3),
+        "hard_negatives": lambda q: hard_negatives(q, index, k=3),
+        "hard_negatives_batched": lambda q: hard_negatives_batched(q, index, k=3),
+    }
+    for name, call in calls.items():
+        full = call(index.filter("vec_id < 2")).schema
+        empty = call(queries)
+        assert empty.schema == full, name
+        assert empty.count() == 0, name
+    ivf = IVFIndex([[1.0] * 6, [-1.0] * 6])
+    with pytest.raises(ValueError, match="empty query batch"):
+        search_batch(ivf, ivf.assign(index), [], k=3)
 
 
 def test_matryoshka_topk_matches_bruteforce(spark):
@@ -148,3 +171,93 @@ def test_matryoshka_topk_matches_bruteforce(spark):
                 if r.query_id == qid and r.dim == d
             ]
             assert have == want, (d, qid)
+
+
+def test_probe_topk_callers_match_bruteforce(spark):
+    """Each probe_topk caller equals a plain-numpy brute force under
+    (score desc, id asc) on an index spread over 3 partitions that
+    holds exact-duplicate vectors (score ties), a zero-norm row, and a
+    zero-norm query — with the hard-negative label mask and the IVF
+    probe-list mask applied. matryoshka_topk at the full dimension is
+    knn_similarity_join plus ``dim``.
+
+    Partition 0 holds, out of id order, row 3's duplicates, three
+    near-copies scaled by 5 (label 0, IVF list 1) and one noisier
+    near-copy (label 1, list 0): for query 100 (row 3's vector, label
+    0, probing list 0 only) the masked rows fill that partition's
+    unmasked top-k, so a mask applied after the local top-k loses
+    row 10."""
+    from wc_vector_indexing_spark.operators.ivf import IVFIndex, search_batch
+    from wc_vector_indexing_spark.operators.similarity import (
+        hard_negatives_batched,
+        matryoshka_topk,
+    )
+
+    D, K = 4, 5
+    rng = np.random.Generator(np.random.PCG64(17))
+    vecs = rng.standard_normal((30, D))
+    vecs[[7, 15, 23]] = vecs[3]  # exact duplicates: score ties
+    vecs[[6, 9, 12]] = 5 * vecs[3] + 0.01 * rng.standard_normal((3, D))
+    vecs[10] = vecs[3] + 0.05 * rng.standard_normal(D)
+    vecs[11] = 0.0  # zero-norm index row
+    qvecs = np.vstack([vecs[3], rng.standard_normal((3, D)), np.zeros(D)])
+    ivf = IVFIndex(
+        [vecs[3].tolist(), (5 * vecs[3]).tolist(), rng.standard_normal(D).tolist()]
+    )
+    near = [15, 3, 10, 7, 12, 6, 9]
+    order = near + [int(i) for i in rng.permutation(30) if i not in near]
+    rows = [(i, vecs[i].tolist(), i % 3) for i in order]
+    schema = "vec_id long, embedding array<double>, label int"
+    index = ivf.assign(
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    )
+    assert index.rdd.getNumPartitions() == 3
+    queries = spark.createDataFrame(
+        [(100 + j, q.tolist(), j % 3) for j, q in enumerate(qvecs)], schema
+    )
+    lists = {r.vec_id: r.list_id for r in index.collect()}
+    assert [lists[i] for i in (3, 10, 6)] == [0, 0, 1]
+
+    def cos(a, b):
+        na, nb = np.linalg.norm(a), np.linalg.norm(b)
+        return 0.0 if na == 0.0 or nb == 0.0 else float(a @ b / (na * nb))
+
+    def brute(d=D, keep=lambda j, i: True):
+        return {
+            (100 + j, rank + 1): i
+            for j, q in enumerate(qvecs)
+            for rank, (_, i) in enumerate(
+                sorted(
+                    (-cos(q[:d], vecs[i][:d]), i)
+                    for i in range(30)
+                    if keep(j, i)
+                )[:K]
+            )
+        }
+
+    def got(df, **match):
+        out = {}
+        for r in df.collect():
+            if all(r[c] == v for c, v in match.items()):
+                out[(r.query_id, r.rank)] = r.neighbor_id
+        return out
+
+    knn = knn_similarity_join(queries, index, k=K)
+    assert got(knn) == brute()
+    mat = matryoshka_topk(queries, index, dims=[2, D], k=K)
+    assert got(mat, dim=2) == brute(d=2)
+    assert got(mat, dim=D) == brute()
+    assert sorted(matryoshka_topk(queries, index, dims=[D], k=K).collect()) == sorted(
+        knn.withColumn("dim", F.lit(D))
+        .select("dim", "query_id", "neighbor_id", "score", "rank")
+        .collect()
+    )
+    other_label = lambda j, i: i % 3 != j % 3  # noqa: E731
+    assert got(hard_negatives_batched(queries, index, k=K, batch_rows=2)) == brute(
+        keep=other_label
+    )
+    probed = [set(ivf.probe_lists(q.tolist(), 1)) for q in qvecs]
+    assert got(
+        search_batch(ivf, index, [(100 + j, q.tolist()) for j, q in enumerate(qvecs)],
+                     k=K, nprobe=1)
+    ) == brute(keep=lambda j, i: lists[i] in probed[j])

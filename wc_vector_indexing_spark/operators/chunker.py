@@ -226,14 +226,16 @@ def chunk_documents(
 
     Partitioning: a small parquet file arrives as ONE partition, which
     would serialize the (python-side) chunking onto one core — so the
-    input is fanned out to the session's default parallelism first when
-    it is under-partitioned. At real scale the scan already yields
-    hundreds of partitions and the repartition is a no-op branch.
+    input is fanned out (``fan_out``) to the session's default
+    parallelism first when it is under-partitioned. At real scale the
+    scan already yields hundreds of partitions and the repartition is a
+    no-op branch.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < max(2, target // 2):
-        df = df.repartition(target)
-    chunked = df.withColumn("_chunks", chunk_udf(size=size, overlap=overlap)(F.col(text_col)))
+    from wc_vector_indexing_spark.functions.partitioning import fan_out
+
+    chunked = fan_out(df).withColumn(
+        "_chunks", chunk_udf(size=size, overlap=overlap)(F.col(text_col))
+    )
     exploded = chunked.select("*", F.explode("_chunks").alias("_c")).drop("_chunks")
     return (
         exploded.withColumn("chunk_index", F.col("_c.index"))

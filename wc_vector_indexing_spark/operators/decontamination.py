@@ -213,7 +213,7 @@ def semantic_contamination(
                 continue
             v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             vn = np.linalg.norm(v, axis=1, keepdims=True)
-            vn[vn == 0.0] = 1.0  # same guard as hard_negatives: fail-closed, not NaN
+            vn[vn == 0.0] = 1.0  # same guard as similarity.probe_topk: fail-closed, not NaN
             v /= vn
             sims = v @ mt  # (batch, n_eval)
             best = sims.argmax(axis=1)  # first max == lowest eval id (rows sorted)

@@ -188,65 +188,23 @@ def search_batch(
     (eval sweeps, bulk retrieval). Here the probe assignments are
     computed driver-side (centroid table is tiny), the index is pruned
     ONCE to the union of probed lists (still partition pruning on
-    list_id), and an Arrow stage scores each partition against the
-    whole query matrix with one gemm — masking rows whose list is not
-    in that query's probe set, exactly the `hard_negatives` masking
-    shape. Local top-k under the global (score desc, id asc) order,
-    window merge: shuffle is partitions × |queries| × k.
+    list_id), and `similarity.probe_topk` scores the whole query batch,
+    masking each query to the rows whose list is in its probe set.
+    Shuffle is partitions × |queries| × k.
     """
-    import pandas as pd
-    from pyspark.sql import Window
+    from pyspark.sql import types as T
 
-    from wc_vector_indexing_spark.functions.partitioning import fan_out
+    from wc_vector_indexing_spark.operators.similarity import probe_topk
 
     if not queries:
         raise ValueError("empty query batch")
-    probe = {qid: frozenset(ivf.probe_lists(v, nprobe)) for qid, v in queries}
-    union_lists = sorted(set().union(*probe.values()))
-    qids = [qid for qid, _ in queries]
-    Q = np.stack([np.asarray(v, dtype="float64") for _, v in queries])
-    qn = np.linalg.norm(Q, axis=1)
-    qn[qn == 0.0] = 1.0
-    Qn = Q / qn[:, None]
-    probe_masks = probe  # closure ships qid -> allowed lists
-
-    def local_topk(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["_id"].to_numpy()
-            lists = pdf["_list"].to_numpy()
-            V = np.stack(pdf["_v"].to_numpy()).astype("float64")
-            base = np.argsort(ids, kind="stable")
-            ids, lists, V = ids[base], lists[base], V[base]
-            n = np.linalg.norm(V, axis=1)
-            n[n == 0.0] = 1.0
-            S = (V / n[:, None]) @ Qn.T
-            out = []
-            for qi, qid in enumerate(qids):
-                col = S[:, qi].copy()
-                allowed = np.isin(lists, list(probe_masks[qid]))
-                col[~allowed] = -np.inf
-                sel = np.argsort(-col, kind="stable")[: min(k, len(ids))]
-                for r in sel:
-                    if col[r] != -np.inf:
-                        out.append((int(qid), ids[r], float(col[r])))
-            yield pd.DataFrame(out, columns=["query_id", "neighbor_id", "score"])
-
-    cand = (
-        fan_out(indexed.filter(F.col("list_id").isin(union_lists)))
-        .select(
-            F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"),
-            F.col("list_id").alias("_list"),
-        )
-        .mapInPandas(local_topk, schema="query_id long, neighbor_id long, score double")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    probe = [ivf.probe_lists(v, nprobe) for _, v in queries]
+    union_lists = sorted(set().union(*probe))
+    return probe_topk(
+        indexed.filter(F.col("list_id").isin(union_lists)),
+        [(int(qid), v) for qid, v in queries], k, T.LongType(), id_col, vec_col,
+        mask_col="list_id", keep=lambda qi, lists: np.isin(lists, probe[qi]),
+    ).select("query_id", "neighbor_id", "score", "rank")
 
 
 def list_stats(

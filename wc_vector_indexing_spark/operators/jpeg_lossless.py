@@ -233,14 +233,3 @@ def to_lossless_jpeg_bytes(img: np.ndarray, predictor: int = 4,
 
 
 __all__ = ["decode_lossless_scan", "to_lossless_jpeg_bytes"]
-
-
-def _selftest_roundtrip(rng: np.random.RandomState | None = None) -> None:
-    """Quick dev harness (not used by tests)."""
-    rng = rng or np.random.RandomState(0)
-    img = rng.randint(0, 256, size=(9, 7), dtype=np.uint8)
-    from wc_vector_indexing_spark.operators.jpeg import decode_jpeg
-
-    for p in range(1, 8):
-        out = decode_jpeg(to_lossless_jpeg_bytes(img, predictor=p))
-        assert np.array_equal(out, img), p

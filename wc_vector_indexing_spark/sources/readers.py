@@ -74,10 +74,6 @@ def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFr
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {t: load(spark, t, sf_dir) for t in TABLES}
-
-
 # binaryFile's fixed output schema; the file-STREAM source requires it
 # restated explicitly, and every whole-file streaming twin (WARC,
 # TFRecord, Avro, Arrow IPC) shares this one definition.
@@ -130,12 +126,6 @@ def eager_manifest(df: DataFrame, dump,
     manifest = manifest.cache()
     manifest.count()
     return manifest
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register all tables as temp views for the SQL API."""
-    for t in TABLES:
-        load(spark, t, sf_dir).createOrReplaceTempView(t)
 
 
 def products(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:

@@ -262,26 +262,6 @@ def _enc_field(num: int, wtype: int, payload: bytes) -> bytes:
     return head + payload
 
 
-def _skip_field(buf: bytes, i: int, wtype: int) -> int:
-    """Skip an unknown field per its wire type (protobuf forward
-    compatibility); raises contract ValueError past EOF."""
-    if wtype == 0:
-        _, i = _dec_uvarint(buf, i)
-        return i
-    if wtype == 1:
-        i += 8
-    elif wtype == 2:
-        n, i = _dec_uvarint(buf, i)
-        i += n
-    elif wtype == 5:
-        i += 4
-    else:
-        raise ValueError(f"unsupported wire type {wtype}")
-    if i > len(buf):
-        raise ValueError("field runs past end of message")
-    return i
-
-
 def _iter_fields(buf: bytes) -> Iterator[tuple[int, int, bytes | int]]:
     """Yield (field_number, wire_type, value) — value is raw bytes for
     wire type 2, the int for varint/fixed (fixed returned as bytes)."""
