@@ -122,3 +122,26 @@ def test_spark_chunk_documents_matches_local(spark):
         got = by_doc[i]
         assert [r.chunk_text for r in got] == [c.text for c in local]
         assert [r.chunk_chars for r in got] == [c.chars for c in local]
+
+
+def test_chunk_documents_runs_the_chunking_udf_once(spark, tmp_path):
+    """One ``_chunk`` Arrow evaluation per row: an inner explode would let
+    Spark infer ``size(_chunks) > 0`` and evaluate the UDF again below
+    the fan-out exchange."""
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(i, f"Product {i}. " + PARA) for i in range(3)], "product_id long, text string"
+    ).coalesce(1).write.parquet(path)
+    out = chunk_documents(spark.read.parquet(path), "text", size=20, overlap=4)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    udf_nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln and "_chunk(" in ln]
+    assert len(udf_nodes) == 1, plan
+    assert out.count() == sum(len(chunk_text(f"Product {i}. " + PARA, 20, 4)) for i in range(3))
+
+
+def test_chunk_documents_empty_and_null_text_give_no_rows(spark):
+    docs = spark.createDataFrame(
+        [(1, ""), (2, None), (3, "   "), (4, "One short doc.")], "doc_id long, text string"
+    )
+    rows = chunk_documents(docs, "text").collect()
+    assert [(r.doc_id, r.chunk_index, r.chunk_text) for r in rows] == [(4, 0, "One short doc.")]

@@ -417,3 +417,177 @@ def test_sync_path_releases_its_caches(spark, env):
     with pytest.raises(ValueError, match="not unique"):
         state.merge(dup.unionByName(dup))
     assert jsc.getPersistentRDDs().size() == n
+
+
+# -- publish order under failure (stage concurrently, publish in order) --------
+
+
+def _record_flips(monkeypatch, stores: dict) -> list[str]:
+    flips: list[str] = []
+    for name, store in stores.items():
+        def flip(v, manifest, name=name, orig=store._flip):
+            flips.append(name)
+            return orig(v, manifest)
+
+        monkeypatch.setattr(store, "_flip", flip)
+    return flips
+
+
+def _fail_stage(monkeypatch, store) -> None:
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected stage failure")
+
+    monkeypatch.setattr(store, "_write_buckets", boom)
+
+
+def _contents(state, index):
+    """Keys, chunk texts and vectors of the index; keys, shas and status
+    of the ledger (timestamps differ between builds)."""
+    idx = sorted(
+        (r.product_id, r.chunk_index, r.chunk_text, tuple(r.values)) for r in index.read().collect()
+    )
+    led = sorted((r.product_id, r.chunk_index, r.chunk_sha, r.status) for r in state.read().collect())
+    return idx, led
+
+
+def _from_scratch(spark, env, tmp_path, texts):
+    config, _, _, backend = env
+    state = sync_state_store(spark, str(tmp_path / "fresh_state"))
+    index = vector_index_store(spark, str(tmp_path / "fresh_index"))
+    sync_products(mk_products(spark, texts), state, index, config, backend, text_col="text")
+    return _contents(state, index)
+
+
+# published stores per injected stage failure: a prefix of (index, ledger)
+_PUBLISHED = {None: ["index", "ledger"], "index": [], "ledger": ["index"]}
+
+
+@pytest.mark.parametrize("fail", [None, "index", "ledger"])
+def test_sync_publishes_a_prefix_of_index_then_ledger(spark, env, tmp_path, monkeypatch, fail):
+    config, state, index, backend = env
+    texts = {1: mklong(1), 2: "Two is short.", 3: "Three is here."}
+    run_sync(spark, env, texts)
+    # an edited, an unchanged and a new product: both stores have work
+    batch = {1: mklong(1) + " A new ending.", 2: "Two is short.", 4: "Four is new."}
+    versions = _versions(state, index)
+    stores = {"index": index, "ledger": state}
+    flips = _record_flips(monkeypatch, stores)
+    if fail:
+        _fail_stage(monkeypatch, stores[fail])
+        with pytest.raises(RuntimeError, match="injected stage failure"):
+            run_sync(spark, env, batch)
+    else:
+        run_sync(spark, env, batch)
+    assert flips == _PUBLISHED[fail]
+    published = _PUBLISHED[fail]
+    assert _versions(state, index) == (
+        versions[0] + ("ledger" in published), versions[1] + ("index" in published)
+    )
+
+    monkeypatch.undo()
+    run_sync(spark, env, batch)  # the replay
+    assert _contents(state, index) == _from_scratch(spark, env, tmp_path, {**texts, **batch})
+
+
+@pytest.mark.parametrize("fail", [None, "index", "ledger"])
+def test_delete_products_publishes_a_prefix_of_index_then_ledger(
+    spark, env, tmp_path, monkeypatch, fail
+):
+    config, state, index, backend = env
+    texts = {p: f"Product {p} has a short body." for p in range(1, 5)}
+    texts[2] = mklong(2)
+    run_sync(spark, env, texts)
+    versions = _versions(state, index)
+    stores = {"index": index, "ledger": state}
+    flips = _record_flips(monkeypatch, stores)
+    if fail:
+        _fail_stage(monkeypatch, stores[fail])
+        with pytest.raises(RuntimeError, match="injected stage failure"):
+            delete_products([2], state, index)
+    else:
+        delete_products([2], state, index)
+    assert flips == _PUBLISHED[fail]
+    published = _PUBLISHED[fail]
+    assert _versions(state, index) == (
+        versions[0] + ("ledger" in published), versions[1] + ("index" in published)
+    )
+
+    monkeypatch.undo()
+    delete_products([2], state, index)  # the replay
+    rest = {p: t for p, t in texts.items() if p != 2}
+    assert _contents(state, index) == _from_scratch(spark, env, tmp_path, rest)
+
+
+def test_sync_batch_repeating_a_product_raises_and_publishes_nothing(spark, env):
+    config, state, index, backend = env
+    run_sync(spark, env, {1: "One is short.", 2: "Two is short."})
+    versions = _versions(state, index)
+    batch = spark.createDataFrame(
+        [Row(product_id=1, text="One is edited."), Row(product_id=1, text="One is edited again.")]
+    )
+    with pytest.raises(ValueError, match="not unique"):
+        sync_products(batch, state, index, config, backend, text_col="text")
+    assert _versions(state, index) == versions
+
+
+def test_write_together_publishes_a_prefix_under_thread_stress(spark):
+    """Eight writes (more than the host's cores) with random stage and
+    publish failures and a short switch interval: every round publishes
+    exactly the writes before the first failure, in order, and raises
+    that failure."""
+    import random
+    import sys
+    import threading
+    import time
+
+    from wc_vector_indexing_spark.operators.delta_sync import _write_together
+
+    class Injected(Exception):
+        pass
+
+    def one_round(rng: random.Random) -> None:
+        n = 8
+        fail = {i: rng.choice(("stage", "publish")) for i in range(n) if rng.random() < 0.15}
+        delay = [rng.random() * 0.002 for _ in range(n)]
+        published: list[int] = []
+
+        def write(i, before_publish):
+            time.sleep(delay[i])
+            if fail.get(i) == "stage":
+                raise Injected(i)
+            before_publish()
+            if fail.get(i) == "publish":
+                raise Injected(i)
+            published.append(i)
+
+        writes = [lambda before_publish, i=i: write(i, before_publish) for i in range(n)]
+        first = min(fail, default=n)
+        if fail:
+            with pytest.raises(Injected) as err:
+                _write_together(spark, *writes)
+            assert err.value.args == (first,)
+        else:
+            _write_together(spark, *writes)
+        assert published == list(range(first))
+
+    errors: list[BaseException] = []
+
+    def rounds() -> None:
+        try:
+            rng = random.Random(7)
+            for _ in range(40):
+                one_round(rng)
+        except BaseException as e:  # re-raised in the test thread below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        t = threading.Thread(target=rounds, daemon=True)
+        t.start()
+        t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not t.is_alive(), "a round deadlocked"
+    if errors:
+        raise errors[0]

@@ -12,7 +12,11 @@ helper never adds a shuffle to a plan that is already parallel.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
+
+_SHUFFLE = re.compile(r"(?<![A-Za-z])Exchange ")
 
 
 def fan_out(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
@@ -24,8 +28,8 @@ def fan_out(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
     plan — the short-circuit keeps frame-level operators (shingle_table,
     simhash64, text quality, …) usable in their stream twins.
 
-    Frames whose physical plan already contains an Exchange pass
-    through untouched too, for two reasons that hold at any scale:
+    Frames whose physical plan already contains a shuffle Exchange
+    pass through untouched too, for two reasons that hold at any scale:
     (a) their parallelism is established by the exchange itself —
     shuffle partitioning plus AQE's parallelismFirst coalescing, so
     the under-parallel case this helper exists for (a small file
@@ -38,7 +42,10 @@ def fan_out(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
     crawl_to_training_set paid this on its whole WARC→extract chain).
     Only narrow leaf chains (scan / LocalTableScan / checkpointed
     ExistingRDD + maps) are probed, where the RDD's partition count is
-    pure metadata and no query stage exists to execute.
+    pure metadata and no query stage exists to execute. A
+    BroadcastExchange (shown, e.g., inside a cached frame's plan) is not
+    a shuffle: the probe side keeps its scan's partitioning, so a
+    one-split scan broadcast-joined to a small frame is still fanned out.
 
     The probe result is memoized on the DataFrame instance for
     operators that call fan_out more than once on the same frame."""
@@ -47,7 +54,8 @@ def fan_out(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
     target = df.sparkSession.sparkContext.defaultParallelism
     n = getattr(df, "_wcvi_num_partitions", None)
     if n is None:
-        if "Exchange" in df._jdf.queryExecution().sparkPlan().toString():
+        # a ShuffleExchangeExec prints as "Exchange"; not BroadcastExchange
+        if _SHUFFLE.search(df._jdf.queryExecution().sparkPlan().toString()):
             return df
         n = df.rdd.getNumPartitions()
         try:

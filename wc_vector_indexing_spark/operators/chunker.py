@@ -221,8 +221,11 @@ def chunk_documents(
     function', SURVEY §2.11). Keeps every input column, adds
     ``chunk_index, chunk_text, chunk_chars, approx_tokens``.
 
-    Documents with empty text produce zero rows (explode drops empty
-    arrays) — matching the reference's skip-empty behavior.
+    Documents with empty or NULL text produce zero rows — matching the
+    reference's skip-empty behavior. The empty chunk arrays are dropped
+    by ``explode_outer`` + a NULL filter, not by ``explode``: Spark infers
+    ``size(_chunks) > 0`` from an inner explode and pushes it below the
+    fan-out exchange, which evaluates the chunking UDF a second time.
 
     Partitioning: a small parquet file arrives as ONE partition, which
     would serialize the (python-side) chunking onto one core — so the
@@ -236,7 +239,11 @@ def chunk_documents(
     chunked = fan_out(df).withColumn(
         "_chunks", chunk_udf(size=size, overlap=overlap)(F.col(text_col))
     )
-    exploded = chunked.select("*", F.explode("_chunks").alias("_c")).drop("_chunks")
+    exploded = (
+        chunked.select("*", F.explode_outer("_chunks").alias("_c"))
+        .drop("_chunks")
+        .filter(F.col("_c").isNotNull())
+    )
     return (
         exploded.withColumn("chunk_index", F.col("_c.index"))
         .withColumn("chunk_text", F.col("_c.text"))

@@ -25,6 +25,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from wc_vector_indexing_spark.functions.threads import run_concurrently
 from wc_vector_indexing_spark.operators import dedup, textstats
 
 
@@ -409,17 +410,13 @@ def curation_report(docs: DataFrame, audit: DataFrame, id_col: str = "doc_id") -
     disjoint subsets of docs (see ``curate``). The previous
     formulation's second action (a left_anti count against the audit)
     re-ran the whole MinHash/LSH chain. The two remaining actions are
-    independent, so they run overlapped from a 2-thread pool."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        reasons_fut = pool.submit(
-            lambda: audit.groupBy("reject_reason")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        )
-        count_fut = pool.submit(docs.count)
-        reason_rows = reasons_fut.result()
-        survivors = count_fut.result() - sum(r.n for r in reason_rows)
+    independent, so they run overlapped on two threads that keep the
+    caller's job group."""
+    reason_rows, n_docs = run_concurrently(
+        docs.sparkSession,
+        lambda: audit.groupBy("reject_reason").agg(F.count("*").alias("n")).collect(),
+        docs.count,
+    )
+    survivors = n_docs - sum(r.n for r in reason_rows)
     rows = sorted([(r.reject_reason, r.n) for r in reason_rows] + [("kept", survivors)])
     return docs.sparkSession.createDataFrame(rows, "reject_reason string, n long")

@@ -28,17 +28,31 @@ MERGE per store per tick — the index takes its stale deletes and
 upserts, the ledger its deletes, synced and error rows and the touch of
 unchanged products (Delta MERGE INTO clauses on a real cluster) — and
 every count and bucket both need comes from one action.
+
+A tick writes its two stores at once: the index write and the ledger
+write each stage (the Spark job that writes the touched buckets' files)
+on their own thread, and once both stages are done they publish (the
+manifest + ``_LATEST`` flip) in the reference's order, index first. So
+after any failure the published versions are a prefix of that order:
+a failed index stage publishes nothing, a failed ledger stage leaves
+the index published and the ledger not — a torn state the next diff
+repairs, since the ledger still holds the old shas. ``delete_products``
+writes its two stores the same way.
 """
 
 from __future__ import annotations
 
+import functools
+import threading
 from dataclasses import dataclass
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from wc_vector_indexing_spark.config import EngineConfig, VALID_TARGETS
+from wc_vector_indexing_spark.functions.threads import run_concurrently
 from wc_vector_indexing_spark.operators.embed import EmbeddingBackend, embed_texts
 from wc_vector_indexing_spark.operators.indexer import attach_payload
 from wc_vector_indexing_spark.state.store import ParquetMergeStore
@@ -54,7 +68,9 @@ class DeltaPlan:
     to_delete: DataFrame  # state keys (product_id, chunk_index) gone stale
     unchanged: DataFrame  # product_ids to touch only
     rebuild: DataFrame  # batch product_ids forced by model/dim change (⊆ to_upsert's products)
-    rows: DataFrame  # batch + ledger rows, ``__kind`` upsert/delete/touch (NULL: no work)
+    # batch + ledger rows, ``__kind`` upsert/delete/touch (NULL: no work),
+    # ``__nkey`` the batch's row count for the row's (product_id, chunk_index)
+    rows: DataFrame
 
 
 def diff(
@@ -96,7 +112,8 @@ def diff(
         F.sort_array(F.collect_list(F.when(new, idx)).over(product)).alias("__new_idx"),
         F.sort_array(F.collect_list(F.when(~new, idx)).over(product)).alias("__old_idx"),
         F.max("__old_chunk_sha").over(key).alias("__key_old_sha"),
-        F.max(new).over(key).alias("__key_in_batch"),
+        # > 1 only if the batch repeats a key: apply_sync's uniqueness check
+        F.count(F.when(new, 1)).over(key).alias("__nkey"),
     )
     # J5: product_sha stable AND chunk-index sets identical AND nothing
     # in error AND no J6 rebuild
@@ -117,7 +134,7 @@ def diff(
         # J3: stored keys absent from the new build, for products in the
         # batch (products absent entirely are deletes, handled by the
         # delete flow, not the sync diff)
-        .when(~new & c("__in_batch") & ~c("__key_in_batch"), "delete")
+        .when(~new & c("__in_batch") & (c("__nkey") == 0), "delete")
         .when(first_chunk & unchanged, "touch")
     )
     rows = rows.withColumn("__kind", kind)
@@ -127,7 +144,7 @@ def diff(
         to_delete=rows.filter(kind == "delete").select("product_id", "chunk_index"),
         unchanged=rows.filter(kind == "touch").select("product_id"),
         rebuild=rows.filter(first_chunk & c("__rebuild")).select("product_id"),
-        rows=rows.select(*new_chunks.columns, "__kind"),
+        rows=rows.select(*new_chunks.columns, "__kind", "__nkey"),
     )
 
 
@@ -138,6 +155,38 @@ class SyncSummary:
     deleted: int
     skipped_products: int
     errored: int = 0
+
+
+def _write_together(spark: SparkSession, *writes: Callable[..., int]) -> None:
+    """Stage the store ``writes`` at once, then publish them in argument
+    order. Each ``write(before_publish=...)`` is one store write call
+    (``merge`` / ``delete_keys``) and runs on its own thread; it
+    publishes once every write has staged or failed and the write before
+    it has published. After any failure the published versions are thus
+    a prefix of the argument order. Raises the first failure in order."""
+    cv = threading.Condition()
+    staged = [False] * len(writes)
+    done: list[bool | None] = [None] * len(writes)  # published, or failed
+
+    def run(i: int, write) -> None:
+        def before_publish() -> None:
+            with cv:
+                staged[i] = True
+                cv.notify_all()
+                cv.wait_for(lambda: all(staged) and (i == 0 or done[i - 1] is not None))
+                if i and not done[i - 1]:
+                    raise RuntimeError("not published: an earlier store write failed")
+
+        ok = False
+        try:
+            write(before_publish=before_publish)
+            ok = True
+        finally:
+            with cv:
+                staged[i], done[i] = True, ok
+                cv.notify_all()
+
+    run_concurrently(spark, *(functools.partial(run, i, w) for i, w in enumerate(writes)))
 
 
 def apply_sync(
@@ -151,17 +200,21 @@ def apply_sync(
 ) -> SyncSummary:
     """Execute a DeltaPlan against the state ledger + vector index
     (apply order: class-indexer.php:391-476) as one MERGE per store.
-    Every row the tick writes lands in one cached frame tagged upsert,
-    error (embed failed), delete (stale chunk) or touch (unchanged
-    product); one aggregate over it yields every count, each store's
-    touched buckets and the MERGE keys' uniqueness check."""
+    Every row the tick writes lands in one locally checkpointed frame
+    tagged upsert, error (embed failed), delete (stale chunk) or touch
+    (unchanged product), so both MERGE plans start from a leaf instead
+    of the diff's lineage. One aggregate over it yields every count,
+    each store's touched buckets and the MERGE keys' uniqueness check
+    (``__nkey``, from the diff). The two MERGEs stage concurrently and
+    publish index first (module docstring): a failure leaves nothing or
+    the index alone published."""
     if target not in VALID_TARGETS:
         raise ValueError(f"invalid target {target!r}")
     now, tag = F.current_timestamp(), F.col("__tag")
 
     # embed ONLY the changed chunks with per-batch failure isolation (W8)
     embedded = embed_texts(
-        plan.to_upsert,
+        plan.rows.filter(F.col("__kind") == "upsert").drop("__kind"),
         text_col="chunk_text",
         out_col="values",
         backend=backend,
@@ -173,19 +226,20 @@ def apply_sync(
         attach_payload(embedded, config, product_cols or [])
         .withColumn("__tag", F.when(F.col("embed_error").isNull(), "upsert").otherwise("error"))
         .unionByName(
-            rest.select("product_id", "chunk_index", F.col("__kind").alias("__tag")),
+            rest.select("product_id", "chunk_index", "__nkey", F.col("__kind").alias("__tag")),
             allowMissingColumns=True,
         )
         .withColumn("target", F.lit(target))
         .withColumn("__bi", index._bucket_expr())
         .withColumn("__bs", state._bucket_expr())
-        .cache()
+        .localCheckpoint(eager=False)
     )
     try:
-        distinct_keys = F.count_distinct(F.struct("product_id", "chunk_index")).alias("k")
-        stats = tagged.groupBy("__tag", "__bi", "__bs").agg(F.count("*").alias("n"), distinct_keys)
+        stats = tagged.groupBy("__tag", "__bi", "__bs").agg(
+            F.count("*").alias("n"), F.max("__nkey").alias("nkey")
+        )
         stats = stats.collect()
-        if any(r["n"] != r["k"] for r in stats):
+        if any(r["nkey"] > 1 for r in stats):
             raise ValueError("merge updates not unique on (product_id, chunk_index)")
         tags = ("upsert", "error", "delete", "touch")
         n = {t: sum(r["n"] for r in stats if r["__tag"] == t) for t in tags}
@@ -195,14 +249,16 @@ def apply_sync(
 
         dels = tagged.filter(tag == "delete").select("target", "product_id", "chunk_index")
         dels = dels if n["delete"] else None
+        writes = []
         # 1) the index: stale chunks out, embedded payloads in (W2, W5)
         if n["upsert"] or n["delete"]:
             upserts = tagged.filter(tag == "upsert").select(
                 "target", "vector_id", "product_id", "chunk_index",
                 "chunk_text", "values", "product_sha", "chunk_sha", "metadata",
             )
+            upserts = upserts if n["upsert"] else None
             touched = buckets("__bi", "upsert", "delete")
-            index.merge(upserts if n["upsert"] else None, delete=dels, buckets=touched)
+            writes.append(functools.partial(index.merge, upserts, delete=dels, buckets=touched))
         # 2) the ledger: stale rows out; synced rows and failed chunks
         # (status='error', re-queued at priority 1 on the next scan: W3,
         # T8) in (W1, created_at immutable); unchanged products get a
@@ -226,14 +282,17 @@ def apply_sync(
                 now.alias("updated_at"),
             )
             touch = tagged.filter(tag == "touch").select("target", "product_id")
-            state.merge(
+            writes.append(functools.partial(
+                state.merge,
                 ledger if n["upsert"] or n["error"] else None,
                 delete=dels,
                 touch=(touch, {"last_synced_at": now, "updated_at": now}) if n["touch"] else None,
                 buckets=buckets("__bs", *n),
-            )
+            ))
+        _write_together(tagged.sparkSession, *writes)
     finally:
-        tagged.unpersist()
+        # the lazy local checkpoint persists its RDD on first use
+        tagged._jdf.queryExecution().logical().rdd().unpersist(False)
     return SyncSummary(
         target, upserted=n["upsert"], deleted=n["delete"], skipped_products=n["touch"], errored=n["error"]
     )
@@ -250,7 +309,10 @@ def delete_products(
     metadata-filter delete as a keyed delete on (target, product_id).
     One aggregate over both stores gives the deleted index-row count and
     each store's buckets: a store rewrites only the buckets holding the
-    products, and publishes nothing if it holds none of their rows."""
+    products, and publishes nothing if it holds none of their rows. The
+    two deletes stage concurrently and publish index first (module
+    docstring): a failed ledger delete leaves ledger rows whose vectors
+    are gone, which a replay of the same delete removes."""
     hit = F.col("target").isin(*targets) & F.col("product_id").isin(*product_ids)
     rows = [s.read().filter(hit).select(F.lit(i).alias("store"), s._bucket_expr().alias("__b"))
             for i, s in enumerate((index, state))]
@@ -258,10 +320,13 @@ def delete_products(
     keys = index.spark.createDataFrame(
         [(t, int(p)) for t in targets for p in product_ids], "target string, product_id long"
     )
+    writes = []
     for i, store in enumerate((index, state)):
         touched = {int(r["__b"]) for r in stats if r["store"] == i}
         if touched:
-            store.delete_keys(keys, ["target", "product_id"], buckets=touched)
+            key_cols = ["target", "product_id"]
+            writes.append(functools.partial(store.delete_keys, keys, key_cols, buckets=touched))
+    _write_together(index.spark, *writes)
     return sum(r["count"] for r in stats if r["store"] == 0)
 
 

@@ -2988,34 +2988,28 @@ def ivf_recall_curve_op(spark: SparkSession, sf: str) -> DataFrame:
     ]
     qdf = emb.filter(F.col("vec_id") < 10)
     # the exact-truth job and the four nprobe sweeps are INDEPENDENT
-    # actions over tiny frames — submit them from a thread pool so the
-    # scheduler overlaps them (guide-standard back-fill; each job's
-    # result is deterministic, so concurrency cannot change the curve)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def exact():
-        return knn_similarity_join(qdf, emb, k=10).collect()
+    # actions over tiny frames — run them on threads so the scheduler
+    # overlaps them (guide-standard back-fill; each job's result is
+    # deterministic, so concurrency cannot change the curve)
+    from wc_vector_indexing_spark.functions.threads import run_concurrently
 
     def probe(nprobe: int):
-        return ivf_search_batch(
-            ivf, indexed, queries, k=10, nprobe=nprobe
-        ).collect()
+        return lambda: ivf_search_batch(ivf, indexed, queries, k=10, nprobe=nprobe).collect()
 
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        truth_fut = pool.submit(exact)
-        probe_futs = [(np_, pool.submit(probe, np_)) for np_ in (1, 2, 4, 8)]
-        truth: dict[int, set] = {}
-        for r in truth_fut.result():
-            truth.setdefault(r.query_id, set()).add(r.neighbor_id)
-        rows = []
-        for nprobe, fut in probe_futs:
-            got: dict[int, set] = {}
-            for r in fut.result():
-                got.setdefault(r.query_id, set()).add(r.neighbor_id)
-            hit = sum(len(truth[q] & got.get(q, set())) for q in truth)
-            rows.append(
-                (nprobe, len(queries), round(hit / (10.0 * len(queries)), 4))
-            )
+    nprobes = (1, 2, 4, 8)
+    exact, *probed = run_concurrently(
+        spark, lambda: knn_similarity_join(qdf, emb, k=10).collect(), *map(probe, nprobes)
+    )
+    truth: dict[int, set] = {}
+    for r in exact:
+        truth.setdefault(r.query_id, set()).add(r.neighbor_id)
+    rows = []
+    for nprobe, result in zip(nprobes, probed):
+        got: dict[int, set] = {}
+        for r in result:
+            got.setdefault(r.query_id, set()).add(r.neighbor_id)
+        hit = sum(len(truth[q] & got.get(q, set())) for q in truth)
+        rows.append((nprobe, len(queries), round(hit / (10.0 * len(queries)), 4)))
     return spark.createDataFrame(rows, "nprobe int, n_queries int, mean_recall double")
 
 

@@ -26,12 +26,18 @@ real cluster swap the class for a Delta table, every call site keeps
 its semantics). A 100 TB ledger at n_buckets=1024 pays ~0.1% of a full
 rewrite for a single-product incremental sync instead of 100%.
 
-Publishing stays atomic: data files land first, then the manifest,
-then ``_LATEST`` flips via write-temp + rename. Readers resolve
-``_LATEST`` once per read, giving snapshot isolation; a crashed writer
-leaves only orphan files for vacuum. Vacuum is reference-counted: a
-data dir survives as long as ANY retained or leased manifest references
-a file inside it.
+Every write is two steps. STAGE runs the Spark job: it writes the new
+files of the touched buckets into a fresh data dir, which no manifest
+references yet, and derives the next manifest. PUBLISH writes that
+manifest and flips ``_LATEST`` via write-temp + rename: no Spark work,
+and atomic. Readers resolve ``_LATEST`` once per read, giving snapshot
+isolation; a writer that dies after its stage leaves only orphan files
+for vacuum. Public writes stage then publish within one call; a caller
+that writes several stores together passes ``before_publish`` to
+``merge`` / ``delete_keys``, which runs between the two steps, to stage
+them at once and still publish in a fixed order (the sync tick:
+``delta_sync``). Vacuum is reference-counted: a data dir survives as
+long as ANY retained or leased manifest references a file inside it.
 
 ``merge`` takes Delta-style clauses — delete keys (WHEN MATCHED
 DELETE), updates (WHEN MATCHED UPDATE / NOT MATCHED INSERT), touch keys
@@ -112,6 +118,8 @@ VECTOR_INDEX_SCHEMA = T.StructType(
 )
 
 INDEX_KEYS = ["target", "vector_id"]
+
+Staged = tuple[int, dict[int, list[str]]]  # (next version, its bucket -> files manifest)
 
 
 class ParquetMergeStore:
@@ -241,17 +249,29 @@ class ParquetMergeStore:
         self._vacuum(keep=3)
         return v
 
-    def _publish(self, df: DataFrame, touched: set[int] | None = None) -> int:
-        """Publish the next version. Slow path, ``touched`` None: ``df``
-        is the whole table. Fast path: ``df`` (from ``_bucketed``) holds
-        the complete new contents of exactly the ``touched`` buckets, and
-        every other bucket's files carry over by reference (not read,
-        copied or rewritten)."""
+    def _stage(self, df: DataFrame, touched: set[int] | None = None) -> Staged:
+        """Stage the next version: write its data files and return
+        (version, manifest) for ``_flip`` to publish. Slow path,
+        ``touched`` None: ``df`` is the whole table. Fast path: ``df``
+        (from ``_bucketed``) holds the complete new contents of exactly
+        the ``touched`` buckets, and every other bucket's files carry
+        over by reference (not read, copied or rewritten)."""
         v = self.current_version() + 1
         if touched is None:
-            return self._flip(v, self._write_buckets(self._bucketed(df, self.n_buckets), v))
+            return v, self._write_buckets(self._bucketed(df, self.n_buckets), v)
         merged = {b: fs for b, fs in (self._manifest(v - 1) or {}).items() if b not in touched}
-        return self._flip(v, {**merged, **self._write_buckets(df, v)})
+        return v, {**merged, **self._write_buckets(df, v)}
+
+    def _publish(self, df: DataFrame, touched: set[int] | None = None) -> int:
+        return self._flip(*self._stage(df, touched))
+
+    def _commit(self, staged: Staged | None, before_publish=None) -> int:
+        """Publish a staged keyed write (None: it matched nothing, so
+        there is nothing to publish) once ``before_publish``, if given,
+        returns; if it raises, nothing is published."""
+        if before_publish is not None:
+            before_publish()
+        return self.current_version() if staged is None else self._flip(*staged)
 
     def _is_legacy(self) -> bool:
         v = self.current_version()
@@ -331,6 +351,8 @@ class ParquetMergeStore:
         delete: DataFrame | None = None,
         touch: tuple[DataFrame, dict[str, F.Column]] | None = None,
         buckets: set[int] | None = None,
+        *,
+        before_publish=None,
     ) -> int:
         """MERGE INTO as one version, equal to ``delete_keys`` → upsert →
         ``update_keys`` in turn: ``delete`` keys (WHEN MATCHED DELETE),
@@ -342,9 +364,13 @@ class ParquetMergeStore:
         ``updates`` must be unique on ``self.keys``: a hard error, not a
         silent pick (SURVEY §7.4 risk 4: nondeterministic dedupe would
         poison fingerprint state). A caller passing ``buckets`` (all its
-        clauses touch) has checked that in its own action."""
+        clauses touch) has checked that in its own action.
+
+        ``before_publish`` runs between the stage and the publish (module
+        docstring); if it raises, the version is not published."""
         if buckets is not None:
-            return self._rewrite(buckets, updates, delete, touch, immutable_cols)
+            staged = self._stage_rewrite(buckets, updates, delete, touch, immutable_cols)
+            return self._commit(staged, before_publish)
         updates = self._conform(updates).cache() if updates is not None else None
         try:
             touched: set[int] | None = set()
@@ -361,10 +387,11 @@ class ParquetMergeStore:
                 if keys is not None:
                     hit = self._key_buckets(keys)
                     touched = None if hit is None or touched is None else touched | hit
-            return self._rewrite(touched, updates, delete, touch, immutable_cols)
+            staged = self._stage_rewrite(touched, updates, delete, touch, immutable_cols)
         finally:
             if updates is not None:
                 updates.unpersist()
+        return self._commit(staged, before_publish)
 
     def delete_where(self, condition) -> int:
         """DELETE FROM t WHERE condition, for arbitrary predicates such
@@ -373,14 +400,21 @@ class ParquetMergeStore:
         return self._publish(self.read().filter(~condition))
 
     def delete_keys(
-        self, keys_df: DataFrame, key_cols: list[str] | None = None, buckets: set[int] | None = None
+        self,
+        keys_df: DataFrame,
+        key_cols: list[str] | None = None,
+        buckets: set[int] | None = None,
+        *,
+        before_publish=None,
     ) -> int:
         """DELETE rows whose key tuple appears in ``keys_df`` (`WHERE
         (k1,k2) IN (...)`, W2). Distributed — no driver-side key
         collection. Bucket-pruned whenever the key frame carries the
-        bucket columns; ``buckets``, if known, saves the bucket collect."""
+        bucket columns; ``buckets``, if known, saves the bucket collect.
+        ``before_publish`` as in ``merge``."""
         keys = keys_df.select(*(key_cols or self.keys))
-        return self._rewrite(self._key_buckets(keys, buckets), delete=keys)
+        staged = self._stage_rewrite(self._key_buckets(keys, buckets), delete=keys)
+        return self._commit(staged, before_publish)
 
     def update_where(self, condition, assignments: dict[str, F.Column]) -> int:
         """UPDATE t SET ... WHERE condition (W3/W4 error-marking and
@@ -398,7 +432,7 @@ class ParquetMergeStore:
         corpus-wide timestamp touch never collects keys. Bucket-pruned
         when the key frame carries the bucket columns."""
         keys = keys_df.select(*key_cols)
-        return self._rewrite(self._key_buckets(keys), touch=(keys, assignments))
+        return self._commit(self._stage_rewrite(self._key_buckets(keys), touch=(keys, assignments)))
 
     def _key_buckets(self, keys: DataFrame, buckets: set[int] | None = None) -> set[int] | None:
         """The buckets a key frame touches (a ≤n_buckets-row collect,
@@ -410,23 +444,24 @@ class ParquetMergeStore:
             buckets = {int(r[0]) for r in keys.select(self._bucket_expr()).distinct().collect()}
         return buckets
 
-    def _rewrite(
+    def _stage_rewrite(
         self,
         touched: set[int] | None,
         updates: DataFrame | None = None,
         delete: DataFrame | None = None,
         touch: tuple[DataFrame, dict[str, F.Column]] | None = None,
         immutable_cols: tuple[str, ...] = (),
-    ) -> int:
-        """The one keyed write: the ``touched`` buckets' rows and every
-        clause's rows are unioned and hash-partitioned on the bucket (as
-        the write needs anyway); each clause finds its matches with a
-        window over (bucket, keys), which that partitioning satisfies:
-        one shuffle, one write. ``touched`` None (keys without the bucket
-        columns) or a legacy snapshot (no bucket->file mapping to carry
-        untouched buckets over) rewrites the whole table."""
+    ) -> Staged | None:
+        """Stage the one keyed write (``_commit`` publishes it): the
+        ``touched`` buckets' rows and every clause's rows are unioned and
+        hash-partitioned on the bucket (as the write needs anyway); each
+        clause finds its matches with a window over (bucket, keys), which
+        that partitioning satisfies: one shuffle, one write. ``touched``
+        None (keys without the bucket columns) or a legacy snapshot (no
+        bucket->file mapping to carry untouched buckets over) rewrites
+        the whole table; ``touched`` empty stages nothing (None)."""
         if touched is not None and not touched:  # nothing matched: no-op
-            return self.current_version()
+            return None
         full = touched is None or self._is_legacy()
         src = F.col("__src")
         rows = self._scan(self.current_version(), None if full else touched)
@@ -459,7 +494,7 @@ class ParquetMergeStore:
         out = rows.filter(src <= 1).select(
             *[F.col(f.name).cast(f.dataType) for f in self.schema], *bucket
         )
-        return self._publish(out, None if full else touched)
+        return self._stage(out, None if full else touched)
 
     # -- helpers -----------------------------------------------------------
 
