@@ -346,3 +346,191 @@ def test_curate_host_prior_reweights_quality(spark):
     reasons = {r.doc_id: r.reject_reason for r in audit.collect()}
     kept = {r.doc_id for r in curated.collect()}
     assert kept == {1} and reasons[2] == "low_quality"
+
+
+def test_curate_empty_null_and_blank_texts(spark):
+    """An empty or NULL text has no quality score and drops as
+    low_quality: no DIVIDE_BY_ZERO under ANSI mode, and no row that is
+    in neither output. A whitespace-only text is scored like any other."""
+    docs = spark.createDataFrame(
+        [(1, GOOD), (2, ""), (3, None), (4, "  \n\t "), (6, GOOD + " Other.")],
+        "doc_id long, text string",
+    )
+    res = curate(docs, CurationConfig(near_dup_threshold=1.01))
+    reasons = {r.doc_id: r.reject_reason for r in res.audit.collect()}
+    kept = {r.doc_id for r in res.curated.collect()}
+    assert reasons == {2: "low_quality", 3: "low_quality", 4: "wrong_language"}
+    assert kept == {1, 6}
+    report = {r.reject_reason: r.n for r in curation_report(docs, res.audit).collect()}
+    assert report["kept"] == len(kept)
+    res.unpersist()
+    # with the language gate off the blank text is a document like any other
+    res = curate(docs, CurationConfig(languages=None, near_dup_threshold=1.01))
+    assert {r.doc_id for r in res.curated.collect()} == {1, 4, 6}
+    res.unpersist()
+
+
+def test_text_quality_of_empty_and_null_text_is_null(spark):
+    from wc_vector_indexing_spark.operators.textstats import text_quality
+
+    docs = spark.createDataFrame([(1, ""), (2, None)], "doc_id long, text string")
+    rows = {r.doc_id: r for r in text_quality(docs).collect()}
+    assert rows[1].n_chars == 0
+    for r in rows.values():
+        assert r.digit_ratio is None and r.quality_score is None
+
+
+def _hosted_docs(spark):
+    spam = "buy now " * 60
+    rows = [
+        (1, GOOD, "hostA"),
+        (2, GOOD, "hostA"),  # exact duplicate of 1
+        (3, GOOD + " A tiny extra tail sentence of filler.", "hostA"),  # near dup
+        (4, "1234567890 " * 30, "hostA"),  # low quality
+        (5, "el la de los las que y en un una " * 12, "hostA"),  # spanish
+        (6, GOOD.replace("today", "gambling"), "hostA"),  # blocklisted
+        (7, GOOD, "hostM"),  # on a non-canonical mirror host
+        (8, GOOD, "hostB"),  # blocked host
+        (9, spam, "hostA"),
+        (10, "The harbor master logged every arrival with a careful note about "
+             "cargo, draft, and the weather over the outer banks that day. " * 2, "hostC"),
+        (11, "", "hostA"),
+        (12, None, "hostC"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string, source string")
+
+
+def _all_stages(spark):
+    from pyspark.sql import Row
+
+    prior = spark.createDataFrame([
+        Row(host="hostA", blocked=False, host_rank=0.9),
+        Row(host="hostB", blocked=True, host_rank=0.1),
+    ])
+    mirrors = spark.createDataFrame([
+        Row(host="hostA", cluster_host="hostA"),
+        Row(host="hostM", cluster_host="hostA"),
+    ])
+    config = CurationConfig(
+        near_dup_threshold=0.5, repetition_thresholds={}, heuristics=("c4", "gopher"),
+        compress_band=(0.05, 1.1), unicode_fix=True, blocklist=("gambling",),
+        lang_percentile=0.99,
+    )
+    return config, dict(host_prior=prior, mirror_clusters=mirrors)
+
+
+def test_curate_audit_and_curated_partition_docs_with_every_stage_on(spark):
+    docs = _hosted_docs(spark)
+    config, extra = _all_stages(spark)
+    res = curate(docs, config, **extra)
+    kept = [r.doc_id for r in res.curated.collect()]
+    audit = [(r.doc_id, r.reject_reason) for r in res.audit.collect()]
+    dropped = [d for d, _ in audit]
+    assert len(dropped) == len(set(dropped)) and len(kept) == len(set(kept))
+    assert set(kept).isdisjoint(dropped)
+    assert set(kept) | set(dropped) == set(range(1, 13))
+    # the host gates run first and an unscorable text drops at the
+    # quality gate, whatever the later stages decide
+    assert {7: "mirror_host", 8: "blocked_host", 11: "low_quality",
+            12: "low_quality"}.items() <= dict(audit).items()
+    assert res.curated.columns == docs.columns
+    res.unpersist()
+
+
+def test_curate_unpersist_releases_every_persisted_rdd(spark):
+    """Three curate passes, each collected and released, leave no RDD
+    registered as persisted: the cached scored corpus and every local
+    checkpoint curate made are released by ``unpersist()``."""
+    docs = _hosted_docs(spark).filter("doc_id <= 10")
+    config, extra = _all_stages(spark)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    for _ in range(3):
+        res = curate(docs, config, **extra)
+        res.curated.collect()
+        res.audit.collect()
+        res.unpersist()
+        res = curate(docs)
+        res.curated.collect()
+        res.audit.collect()
+        res.unpersist()
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+
+
+def test_exact_stage_keeps_the_min_id_row_of_a_hot_cluster(spark):
+    """Exact dedup against a plain-Python min-id rule: a hot text copied
+    80 times over several input partitions, smaller clusters and
+    singletons, with ids in shuffled order. The survivor is the whole
+    min-id row, in docs' column order and types."""
+    import random
+
+    rnd = random.Random(7)
+    texts = [GOOD] * 80 + [f"{GOOD} Variant {i % 5} with words {i % 5}." for i in range(20)]
+    texts += [f"A singleton page number {w} about {w} harbors and ships." * 4
+              for w in ("one", "two", "three", "four", "five")]
+    ids = rnd.sample(range(1000, 5000), len(texts))
+    rows = [(i, t, float(i) / 7.0) for i, t in zip(ids, texts)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, weight double").repartition(5)
+    assert docs.rdd.getNumPartitions() == 5
+
+    res = curate(docs, CurationConfig(languages=None, min_quality=0.0, near_dup_threshold=1.01))
+    want_kept = {}
+    for i, t, w in rows:
+        if t not in want_kept or i < want_kept[t][0]:
+            want_kept[t] = (i, t, w)
+    kept = sorted(tuple(r) for r in res.curated.collect())
+    assert kept == sorted(want_kept.values())
+    audit = sorted((r.doc_id, r.reject_reason) for r in res.audit.collect())
+    survivors = {v[0] for v in want_kept.values()}
+    assert audit == sorted((i, "exact_duplicate") for i in ids if i not in survivors)
+    assert res.curated.schema == docs.schema
+    res.unpersist()
+
+
+def test_exact_stage_combines_map_side_without_a_window(spark):
+    """The exact stage is one aggregate on the text hash: a partial
+    aggregate of min_by/collect_list directly below its one exchange,
+    so copies of a hot text combine before the shuffle, and no window
+    (which would ship every copy, full row, to one reducer)."""
+    import re
+
+    docs = spark.createDataFrame(
+        [(i, GOOD) for i in range(12)], "doc_id long, text string"
+    ).repartition(3)
+    res = curate(docs, CurationConfig(near_dup_threshold=1.01))
+    store = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [store.apply(i).physicalPlanDescription() for i in range(store.size())]
+    plan = [p for p in plans if "partial_min_by" in p][-1]
+    final = plan.split("== Initial Plan ==")[0]
+    below = re.search(r"Exchange \((\d+)\)\n\s*\+- ObjectHashAggregate \((\d+)\)", final)
+    assert below, final
+    agg = plan.split(f"({below.group(2)}) ObjectHashAggregate")[1].split("\n\n")[0]
+    assert "partial_min_by" in agg and "partial_collect_list" in agg
+    key = re.search(r"Keys \[1\]: \[(\S+)\]", agg).group(1)
+    exchange = plan.split(f"({below.group(1)}) Exchange")[1].split("\n\n")[0]
+    assert f"hashpartitioning({key}, " in exchange
+    assert "Window" not in plan.split("\n\n")[0]  # the operator tree
+    assert res.curated.count() == 1
+    res.unpersist()
+
+
+def test_curation_oracle_agrees_on_empty_and_null_texts(spark):
+    """The DuckDB oracle of the curation entries counts an empty or NULL
+    text as low_quality too, so parity holds on such a corpus."""
+    import duckdb
+    import pandas as pd
+
+    from wc_vector_indexing_spark.plans.queries import _curation_sql
+
+    rows = [
+        (1, GOOD), (2, GOOD), (3, ""), (4, None), (5, "el la de los las que y en un una " * 12),
+        (6, "1234567890 " * 30), (7, GOOD + " A tiny extra tail sentence of filler."),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    res = curate(docs, CurationConfig(min_quality=0.5, languages=("en",), minhash_token_hash="md5"))
+    got = sorted((r.reject_reason, r.n) for r in curation_report(docs, res.audit).collect())
+    res.unpersist()
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    assert got == sorted(con.sql(_curation_sql()).fetchall())
+    assert dict(got)["low_quality"] == 3

@@ -2,10 +2,12 @@
 composition (north-star surface): quality gate → language filter →
 exact dedup → near-dup removal → curated corpus + audit trail.
 
-One lazy plan start to finish; each stage tags rejected rows with a
-reason instead of dropping them silently, so the pipeline emits BOTH the
-curated corpus and a per-reason audit (at 100 TB you need to know what
-the filters ate — silent truncation is how corpora go bad).
+Each stage that runs tags rejected rows with a reason instead of
+dropping them silently, so the pipeline emits BOTH the curated corpus
+and a per-reason audit (at 100 TB you need to know what the filters ate
+— silent truncation is how corpora go bad). The plan is lazy but for two
+stage boundaries, each materialized once: the exact-dedup aggregate
+(eager local checkpoint) and the near-dup drop list (lazy).
 
 Stage order is the cheap-first rule: pure-projection filters (quality,
 language) run before anything that shuffles (dedup), so the shuffled
@@ -20,11 +22,13 @@ its min-id representative — transitively consistent: pairs (1,3) and
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from wc_vector_indexing_spark.functions.hashing import sha_text
 from wc_vector_indexing_spark.functions.threads import run_concurrently
 from wc_vector_indexing_spark.operators import dedup, textstats
 
@@ -81,10 +85,11 @@ class CurationConfig:
 
 class CurationResult:
     """(curated, audit) plus a handle on the pipeline's persisted
-    intermediates. Unpacks like the 2-tuple it replaced; call
-    ``unpersist()`` once the outputs are materialized — a long-lived
-    session that curates many corpora without releasing these
-    accumulates executor storage until every later job pays for it."""
+    intermediates (cached frames and local checkpoints). Unpacks like
+    the 2-tuple it replaced; call ``unpersist()`` once the outputs are
+    materialized — a long-lived session that curates many corpora
+    without releasing these accumulates executor storage until every
+    later job pays for it."""
 
     def __init__(self, curated: DataFrame, audit: DataFrame, cached: tuple = ()):
         self.curated = curated
@@ -98,8 +103,14 @@ class CurationResult:
         return (self.curated, self.audit)[i]
 
     def unpersist(self) -> None:
+        # blocking: the blocks are gone when this returns, not whenever
+        # Spark's cleaner gets to them after a later GC
         for df in self._cached:
-            df.unpersist()
+            if df.is_cached:
+                df.unpersist(blocking=True)
+            else:  # a local checkpoint: release the RDD it scans
+                df._jdf.queryExecution().logical().rdd().unpersist(True)
+        self._cached = ()
 
 
 def curate(
@@ -113,12 +124,15 @@ def curate(
 ) -> CurationResult:
     """Returns a :class:`CurationResult` (unpacks as ``curated, audit``):
 
-      curated — the surviving rows of ``docs`` (all original columns)
+      curated — the surviving rows of ``docs`` (all original columns,
+                in their order and with their types)
       audit   — (doc_id, reject_reason) for every dropped row, reason ∈
                 {mirror_host, blocked_host, low_quality, wrong_language,
                 c4_boilerplate, gopher_rules, blocklisted,
                 below_lang_percentile, compress_outlier, repetitive,
                 exact_duplicate, near_duplicate}
+
+    ``id_col`` must be unique in ``docs`` (the audit is keyed on it).
 
     ``mirror_clusters`` (optional) is the output of
     :func:`~wc_vector_indexing_spark.operators.mirrors.mirror_host_clusters`
@@ -141,18 +155,26 @@ def curate(
     vocabulary, so both the gate and the re-weight join broadcast —
     the corpus never shuffles for this stage.
 
+    A document with no score (NULL or empty text) is ``low_quality``.
+
+    The scored corpus is cached; the exact-dedup aggregate (read by the
+    survivors and the ``exact_duplicate`` branch) and the near-dup drop
+    list are local checkpoints. ``unpersist()`` releases all of them.
+
     The audit branches are DISJOINT subsets of ``docs`` (each stage
     only examines the previous stage's survivors), so
     ``|curated| = |docs| - |audit|`` — curation_report relies on this.
     """
     config = config or CurationConfig()
     orig_cols = list(docs.columns)
+    dropped: list[tuple[str, DataFrame]] = []  # (reason, ids) per stage run
+    held: list[DataFrame] = []  # released by CurationResult.unpersist
 
     # quality and language are pure column expressions over each row —
     # appended in place, NOT computed as separate frames joined back
     # (two shuffles of the corpus for values derivable in the scan
-    # projection). base feeds four audit branches + the survivor chain —
-    # persist it once instead of re-scoring the corpus per branch.
+    # projection). base feeds the gate audit branches + the survivor
+    # chain — persist it once instead of re-scoring the corpus per branch.
     from wc_vector_indexing_spark.functions.partitioning import fan_out
 
     if config.unicode_fix:
@@ -174,12 +196,10 @@ def curate(
             .select("host")
             .localCheckpoint(eager=True)
         )
+        held.append(mirrors)
         m_on = docs[host_col] == mirrors["host"]
-        mirror_dropped = docs.join(
-            F.broadcast(mirrors), m_on, "left_semi").select(id_col)
+        dropped.append(("mirror_host", docs.join(F.broadcast(mirrors), m_on, "left_semi")))
         docs = docs.join(F.broadcast(mirrors), m_on, "left_anti")
-    else:
-        mirror_dropped = docs.limit(0).select(id_col)
 
     rank_mult = None
     if host_prior is not None:
@@ -191,14 +211,12 @@ def curate(
         # aggregate, and the gate/re-weight/max-rank consumers run in
         # separate actions that would each replay that whole chain
         host_prior = host_prior.localCheckpoint(eager=True)
+        held.append(host_prior)
         if "blocked" in host_prior.columns:
             blocked = host_prior.filter(F.col("blocked")).select("host")
             on = docs[host_col] == blocked["host"]
-            host_dropped = docs.join(
-                F.broadcast(blocked), on, "left_semi").select(id_col)
+            dropped.append(("blocked_host", docs.join(F.broadcast(blocked), on, "left_semi")))
             docs = docs.join(F.broadcast(blocked), on, "left_anti")
-        else:
-            host_dropped = docs.limit(0).select(id_col)
         if "host_rank" in host_prior.columns:
             # normalize on the driver: the prior is a bounded table
             # and the scalar keeps the multiplier a pure literal
@@ -221,8 +239,6 @@ def curate(
             # unranked hosts (no in/out links) sit at the neutral 1.0x
             rank_mult = 0.8 + 0.4 * F.coalesce(
                 F.col("_rank_norm"), F.lit(0.5))
-    else:
-        host_dropped = docs.limit(0).select(id_col)
 
     quality = F.round(textstats.quality_score_col(F.col(text_col)), 4)
     if rank_mult is not None:
@@ -246,41 +262,35 @@ def curate(
             f"lang_router must be 'stopwords' or 'ngram', got "
             f"{config.lang_router!r}")
     base = scored.persist()
+    held.append(base)
 
-    low_q = base.filter(F.col("quality_score") < config.min_quality)
-    kept = base.filter(F.col("quality_score") >= config.min_quality)
+    kept = base
 
+    def gate(reason: str, keep: F.Column) -> None:
+        nonlocal kept
+        dropped.append((reason, kept.filter(~keep)))
+        kept = kept.filter(keep)
+
+    # a NULL score (NULL or empty text) fails the gate
+    gate("low_quality", F.coalesce(F.col("quality_score") >= config.min_quality, F.lit(False)))
     if config.languages is not None:
-        wrong_lang = kept.filter(~F.col("predicted_lang").isin(*config.languages))
-        kept = kept.filter(F.col("predicted_lang").isin(*config.languages))
-    else:
-        wrong_lang = kept.limit(0)
+        gate("wrong_language", F.col("predicted_lang").isin(*config.languages))
 
     # heuristic gates: still pure per-row predicates, so they run before
     # anything that shuffles; each is its own disjoint audit branch
     if config.heuristics and "c4" in config.heuristics:
         from wc_vector_indexing_spark.operators.heuristics import c4_keep_col
 
-        c4_dropped = kept.filter(~c4_keep_col(text_col)).select(id_col)
-        kept = kept.filter(c4_keep_col(text_col))
-    else:
-        c4_dropped = kept.limit(0).select(id_col)
+        gate("c4_boilerplate", c4_keep_col(text_col))
     if config.heuristics and "gopher" in config.heuristics:
         from wc_vector_indexing_spark.operators.heuristics import gopher_pass_col
 
-        gopher_dropped = kept.filter(~gopher_pass_col(text_col)).select(id_col)
-        kept = kept.filter(gopher_pass_col(text_col))
-    else:
-        gopher_dropped = kept.limit(0).select(id_col)
+        gate("gopher_rules", gopher_pass_col(text_col))
 
     if config.blocklist:
         from wc_vector_indexing_spark.operators.heuristics import blocklist_hits
 
-        hits = blocklist_hits(text_col, config.blocklist)
-        block_dropped = kept.filter(hits > 0).select(id_col)
-        kept = kept.filter(hits <= 0)
-    else:
-        block_dropped = kept.limit(0).select(id_col)
+        gate("blocklisted", blocklist_hits(text_col, config.blocklist) <= 0)
 
     # per-language percentile gate: fit is ONE bounded per-group
     # quantile aggregate over the current survivors (languages number
@@ -304,15 +314,9 @@ def curate(
             # fit a percentile on; the stage is a no-op, not an error
             thresholds = None
         if thresholds:
-            gate = quality_gate_col(
+            gate("below_lang_percentile", quality_gate_col(
                 thresholds, group_col="predicted_lang", score_col="quality_score"
-            )
-            pct_dropped = kept.filter(~gate).select(id_col)
-            kept = kept.filter(gate)
-        else:
-            pct_dropped = kept.limit(0).select(id_col)
-    else:
-        pct_dropped = kept.limit(0).select(id_col)
+            ))
 
     # compressibility gate: still per-row, but it crosses into Python
     # (Arrow-batched zlib) — so it runs AFTER the pure-codegen gates
@@ -326,10 +330,7 @@ def curate(
         ratio = deflate_size_col(text_col) / F.greatest(
             F.octet_length(F.col(text_col)), F.lit(1)
         )
-        compress_dropped = kept.filter(~ratio.between(lo, hi)).select(id_col)
-        kept = kept.filter(ratio.between(lo, hi))
-    else:
-        compress_dropped = kept.limit(0).select(id_col)
+        gate("compress_outlier", ratio.between(lo, hi))
 
     # repetition gate (Gopher filters) — after the pure-projection gates
     # (it shuffles on doc-keyed aggregations), before anything corpus-wide
@@ -346,25 +347,29 @@ def curate(
             cond = F.col(col) > bound
             over = cond if over is None else (over | cond)
         rep_dropped = sig.filter(over).select(id_col)
+        dropped.append(("repetitive", rep_dropped))
         kept = kept.join(rep_dropped, id_col, "left_anti")
-    else:
-        rep_dropped = kept.limit(0).select(id_col)
 
-    kept = kept.persist()
-    filtered = kept  # the persisted post-filter survivors (for cleanup)
-    # exact dedup: keep the canonical (min-id) row per distinct text
-    groups = dedup.exact_duplicates(kept, text_col=text_col, id_col=id_col)
-    canon = groups.select(F.col("canonical_id").alias(id_col))
-    exact_dropped = kept.join(canon, id_col, "left_anti").select(id_col)
-    # Stage boundary: truncate lineage before the near-dup stage. The
-    # minhash chain references this frame from several branches (band
-    # UDF, jaccard verify, final anti-join) and the component iteration
-    # runs many actions over it — each would otherwise re-plan the whole
-    # scan→score→filter→dedup DAG on the driver (seconds of Catalyst
-    # work per action, independent of data size). The cluster-scale
-    # analogue is writing the filtered corpus between pipeline stages,
-    # which every real curation pipeline does anyway.
-    kept = kept.join(canon, id_col, "left_semi").localCheckpoint(eager=True)
+    # exact dedup: ONE aggregate per distinct text keeps the min-id row
+    # whole and lists every id. It combines map-side below its one
+    # exchange, so a hot text's copies collapse before the shuffle (a
+    # window over the hash would ship every copy, full row, to one
+    # reducer). Its eager checkpoint serves the survivor chain and the
+    # exact_duplicate branch, and cuts the lineage the near-dup stage's
+    # many actions would each re-plan on the driver — the cluster
+    # analogue is writing the filtered corpus between stages.
+    groups = (
+        kept.groupBy(sha_text(text_col).alias("_sha"))
+        .agg(
+            F.min_by(F.struct(*orig_cols), F.col(id_col)).alias("_row"),
+            F.collect_list(id_col).alias("_ids"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    held.append(groups)
+    kept = groups.select("_row.*")
+    dropped.append(("exact_duplicate", groups.select(
+        F.explode(F.array_remove("_ids", F.col(f"_row.{id_col}"))).alias(id_col))))
 
     # near-dup removal on the survivors only: pair generation, pair
     # clustering and keep-min representative selection as ONE operator
@@ -382,23 +387,15 @@ def curate(
         id_col=id_col,
         token_hash=config.minhash_token_hash,
     ).localCheckpoint(eager=False)
+    held.append(near_dropped)
+    dropped.append(("near_duplicate", near_dropped))
     kept = kept.join(near_dropped, id_col, "left_anti")
 
-    audit = (
-        mirror_dropped.withColumn("reject_reason", F.lit("mirror_host"))
-        .unionByName(host_dropped.withColumn("reject_reason", F.lit("blocked_host")))
-        .unionByName(low_q.select(id_col).withColumn("reject_reason", F.lit("low_quality")))
-        .unionByName(wrong_lang.select(id_col).withColumn("reject_reason", F.lit("wrong_language")))
-        .unionByName(c4_dropped.withColumn("reject_reason", F.lit("c4_boilerplate")))
-        .unionByName(gopher_dropped.withColumn("reject_reason", F.lit("gopher_rules")))
-        .unionByName(block_dropped.withColumn("reject_reason", F.lit("blocklisted")))
-        .unionByName(pct_dropped.withColumn("reject_reason", F.lit("below_lang_percentile")))
-        .unionByName(compress_dropped.withColumn("reject_reason", F.lit("compress_outlier")))
-        .unionByName(rep_dropped.withColumn("reject_reason", F.lit("repetitive")))
-        .unionByName(exact_dropped.withColumn("reject_reason", F.lit("exact_duplicate")))
-        .unionByName(near_dropped.withColumn("reject_reason", F.lit("near_duplicate")))
-    )
-    return CurationResult(kept.select(*orig_cols), audit, cached=(base, filtered))
+    audit = functools.reduce(DataFrame.unionByName, (
+        ids.select(id_col).withColumn("reject_reason", F.lit(reason))
+        for reason, ids in dropped
+    ))
+    return CurationResult(kept.select(*orig_cols), audit, cached=tuple(held))
 
 
 def curation_report(docs: DataFrame, audit: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -271,15 +271,15 @@ def _minhash_ab(num_hashes: int):
     return a, b
 
 
-def _doc_sig_bands(text: str, k: int, shash, a, b, bands: int, rows: int):
-    """(mins, band_hashes) for one document — the shared signature +
-    band-bucket arithmetic. Band bucket = blake2b of the band's
-    signature rows (+ band index so bands never cross-match)."""
+def _doc_sig_bands(shingles: set[str], shash, a, b, bands: int, rows: int):
+    """(mins, band_hashes) for one document's ``_doc_shingles`` set —
+    the shared signature + band-bucket arithmetic. Band bucket =
+    blake2b of the band's signature rows (+ band index so bands never
+    cross-match)."""
     import hashlib
 
     import numpy as np
 
-    shingles = _doc_shingles(text, k)
     hs = np.fromiter(
         (shash(s) for s in shingles), dtype=np.int64, count=len(shingles)
     )
@@ -310,7 +310,7 @@ def _band_bucket_udf(num_hashes: int, bands: int, k: int, token_hash: str = "crc
     @pandas_udf(T.ArrayType(T.LongType()))
     def sig(texts: pd.Series) -> pd.Series:
         return texts.map(
-            lambda t: _doc_sig_bands(t, k, shash, a, b, bands, rows)[1]
+            lambda t: _doc_sig_bands(_doc_shingles(t, k), shash, a, b, bands, rows)[1]
         )
 
     return sig
@@ -338,7 +338,8 @@ def sig_and_buckets_udf(
     def both(texts: pd.Series) -> pd.DataFrame:
         sigs, bucks = [], []
         for text in texts:
-            mins, band_hashes = _doc_sig_bands(text, k, shash, a, b, bands, rows)
+            mins, band_hashes = _doc_sig_bands(
+                _doc_shingles(text, k), shash, a, b, bands, rows)
             sigs.append([int(x) for x in mins])
             bucks.append(band_hashes)
         return pd.DataFrame({"sig": sigs, "buckets": bucks})
@@ -358,7 +359,8 @@ def _verified_pairs_task(
     (_id, _text) frame → the verified near-dup pairs
     [(doc_a, doc_b, raw_jaccard)] with doc_a < doc_b — byte-exact twin
     of the distributed band/candidate/verify plan (see
-    ``_single_task_minhash_pairs``)."""
+    ``_single_task_minhash_pairs``). Each doc's shingle set is built
+    once; the verify hashes are computed only for candidate docs."""
     shash = _shingle_hasher(token_hash, _M31)
     rows = num_hashes // bands
     a, b = _minhash_ab(num_hashes)
@@ -367,13 +369,19 @@ def _verified_pairs_task(
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         order = pdf.sort_values("_id", kind="mergesort")
         buckets: dict[int, list] = {}
-        universe: dict = {}
+        shingles: dict = {}
         for doc, text in zip(order["_id"], order["_text"]):
-            shingles = _doc_shingles(text, k)
-            _, band_hashes = _doc_sig_bands(text, k, shash, a, b, bands, rows)
+            shingles[doc] = _doc_shingles(text, k)
+            _, band_hashes = _doc_sig_bands(shingles[doc], shash, a, b, bands, rows)
             for bh in band_hashes:
                 buckets.setdefault(bh, []).append(doc)
-            universe[doc] = {_h64(s) for s in shingles}
+        universe: dict = {}  # verify hashes, only for candidate docs
+
+        def hashed(doc):
+            if doc not in universe:
+                universe[doc] = {_h64(s) for s in shingles[doc]}
+            return universe[doc]
+
         cand = set()
         for ds in buckets.values():
             if len(ds) < 2 or (mb is not None and len(ds) > mb):
@@ -386,7 +394,7 @@ def _verified_pairs_task(
                     cand.add((ds[x], ds[y]))
         out = []
         for da, db in cand:
-            sa, sb = universe[da], universe[db]
+            sa, sb = hashed(da), hashed(db)
             shared = len(sa & sb)
             if shared == 0:
                 continue  # no co-occurring shingle: the verify index

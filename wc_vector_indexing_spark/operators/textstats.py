@@ -50,11 +50,13 @@ def _char_class_count(c: Column, pattern: str) -> Column:
 
 def quality_score_col(text_col: str | Column) -> Column:
     """The composite quality score as a standalone column expression —
-    usable directly on a stream (no join, no state)."""
+    usable directly on a stream (no join, no state). NULL for a NULL or
+    empty text (its character ratios are undefined)."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     n_tokens = token_count(c)
-    digit_ratio = _char_class_count(c, r"[^0-9]") / F.length(c)
-    punct_ratio = _char_class_count(c, r"[^.,;:!?]") / F.length(c)
+    n_chars = F.when(F.length(c) > 0, F.length(c))
+    digit_ratio = _char_class_count(c, r"[^0-9]") / n_chars
+    punct_ratio = _char_class_count(c, r"[^.,;:!?]") / n_chars
     return (
         F.least(F.lit(1.0), n_tokens / F.lit(100.0)) * 0.4
         + (1.0 - digit_ratio) * 0.3
@@ -65,7 +67,8 @@ def quality_score_col(text_col: str | Column) -> Column:
 def text_quality(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Per-document quality metrics (length / digit / punctuation /
     uppercase ratios + a composite score). Deterministic rational
-    arithmetic — mirrors the DuckDB oracle exactly."""
+    arithmetic — mirrors the DuckDB oracle exactly; the ratios and the
+    score of an empty text are NULL."""
     from wc_vector_indexing_spark.functions.partitioning import fan_out
 
     docs = fan_out(docs)  # regexp counts over every char; parallelize them
@@ -75,9 +78,10 @@ def text_quality(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     digits = _char_class_count(c, r"[^0-9]")
     punct = _char_class_count(c, r"[^.,;:!?]")
     upper = _char_class_count(c, r"[^A-Z]")
-    digit_ratio = digits / n_chars
-    punct_ratio = punct / n_chars
-    upper_ratio = upper / n_chars
+    per_char = F.when(n_chars > 0, n_chars)
+    digit_ratio = digits / per_char
+    punct_ratio = punct / per_char
+    upper_ratio = upper / per_char
     score = quality_score_col(c)
     return docs.select(
         F.col(id_col),

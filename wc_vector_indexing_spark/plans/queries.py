@@ -2419,9 +2419,11 @@ def _curation_ctes(rel: str = "documents", mult_col: str | None = None) -> str:
     md5-mode minhash near-dup clustering (scaffold CTEs over the
     survivor relation, default 256 bucket cap, threshold 0.5,
     recursive-CTE components) ending at ``near_dropped``; curated
-    survivors = s2 − near_dropped. ``mult_col`` (a column of ``rel``)
-    replays the host-prior quality re-weight: q = round(round(raw, 4)
-    * mult, 4), the operator's exact double-rounding."""
+    survivors = s2 − near_dropped. A NULL score (NULL or empty text:
+    DuckDB's x / 0 is NULL) is low quality, as in the operator.
+    ``mult_col`` (a column of ``rel``) replays the host-prior quality
+    re-weight: q = round(round(raw, 4) * mult, 4), the operator's exact
+    double-rounding."""
     from wc_vector_indexing_spark.operators.textstats import (
         LANG_MIN_RATIO,
         STOPWORDS,
@@ -2458,7 +2460,7 @@ def _curation_ctes(rel: str = "documents", mult_col: str | None = None) -> str:
                 WHEN fr_r >= {m} THEN 'fr'
                 ELSE 'other' END AS predicted_lang
     FROM scored
-), low_q AS (SELECT doc_id FROM langd WHERE q < 0.5),
+), low_q AS (SELECT doc_id FROM langd WHERE q < 0.5 OR q IS NULL),
 wrong_lang AS (SELECT doc_id FROM langd WHERE q >= 0.5 AND predicted_lang <> 'en'),
 s1 AS (SELECT doc_id, text FROM langd WHERE q >= 0.5 AND predicted_lang = 'en'),
 exact_dropped AS (
