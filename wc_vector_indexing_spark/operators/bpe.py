@@ -22,8 +22,10 @@ smallest pair, so the merge list is a pure function of the corpus.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 END_WORD = "</w>"
 
@@ -128,15 +130,10 @@ def bpe_encode_col(merges: list[tuple[str, str]], text_col: str | Column) -> Col
     """Arrow-batched subword segmentation of every word in ``text_col``
     (array<string> output). The merge list broadcasts in the closure —
     no shuffle, no per-row python round-trip."""
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
     ranks = {pair: i for i, pair in enumerate(merges)}
 
-    # no type hints: `from __future__ import annotations` stringizes
-    # them, which pandas_udf signature inference rejects
-    @pandas_udf("array<string>", PandasUDFType.SCALAR)
-    def enc(texts):
+    @pandas_udf("array<string>")
+    def enc(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts:
             pieces: list[str] = []

@@ -28,7 +28,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wc_vector_indexing_spark.functions.vectors import dot, l2_norm
+from wc_vector_indexing_spark.functions.vectors import dot_to
+from wc_vector_indexing_spark.operators.similarity import knn_exact, probe_topk
 
 
 class IVFIndex:
@@ -125,10 +126,7 @@ class IVFIndex:
         return F.array(
             *[
                 F.struct(
-                    (
-                        F.lit(float(np.dot(c, c)))
-                        - 2.0 * dot(F.col(vec_col), F.array(*[F.lit(float(x)) for x in c]))
-                    ).alias("s"),
+                    (F.lit(float(np.dot(c, c))) - 2.0 * dot_to(vec_col, c)).alias("s"),
                     F.lit(i).alias("i"),
                 )
                 for i, c in enumerate(self.centroids)
@@ -156,20 +154,8 @@ class IVFIndex:
         ``indexed`` must carry list_id (from assign); when the table is
         written partitioned by list_id the isin filter becomes partition
         pruning."""
-        import math
-
-        lists = self.probe_lists(query_vector, nprobe)
-        pruned = indexed.filter(F.col("list_id").isin(lists))
-        q = F.array(*[F.lit(float(x)) for x in query_vector])
-        qnorm = math.sqrt(sum(x * x for x in query_vector)) or 1.0
-        denom = l2_norm(F.col(vec_col)) * F.lit(qnorm)
-        score = F.when(denom == 0.0, F.lit(0.0)).otherwise(dot(F.col(vec_col), q) / denom)
-        return (
-            pruned.withColumn("score", score)
-            .select(id_col, "score")
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k)
-        )
+        pruned = indexed.filter(F.col("list_id").isin(self.probe_lists(query_vector, nprobe)))
+        return knn_exact(pruned, query_vector, k, vec_col, id_col)
 
 
 def search_batch(
@@ -193,8 +179,6 @@ def search_batch(
     Shuffle is partitions × |queries| × k.
     """
     from pyspark.sql import types as T
-
-    from wc_vector_indexing_spark.operators.similarity import probe_topk
 
     if not queries:
         raise ValueError("empty query batch")

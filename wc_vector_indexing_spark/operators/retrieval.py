@@ -309,7 +309,7 @@ def mmr_rerank(
     """
     import numpy as np
 
-    from wc_vector_indexing_spark.functions.vectors import cosine
+    from wc_vector_indexing_spark.functions.vectors import cosine_to
 
     if not 0.0 <= lam <= 1.0:
         raise ValueError(f"lam must be in [0, 1], got {lam}")
@@ -317,7 +317,7 @@ def mmr_rerank(
     q /= np.linalg.norm(q)
     cands = (
         index.select(id_col, vec_col)
-        .withColumn("relevance", cosine(F.lit(q.tolist()), vec_col))
+        .withColumn("relevance", cosine_to(vec_col, q.tolist()))
         .orderBy(F.desc("relevance"), F.asc(id_col))
         .limit(fetch)
         .collect()

@@ -23,7 +23,11 @@ so kNN becomes a Spark plan:
 
 Outside probe_topk's Arrow gemm stage, all vector math is JVM-side
 (functions/vectors.py) — zip_with/aggregate inside codegen, no Python
-in the scan loop.
+in the scan loop. A score against a constant vector (the kNN query, an
+LSH hyperplane, an IVF centroid) is built as ONE SQL expression
+(vectors.cosine_to / dot_to) that Spark parses on the JVM, so a query's
+driver-side set-up is a handful of py4j round trips, not one per
+dimension.
 """
 
 from __future__ import annotations
@@ -31,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from wc_vector_indexing_spark.functions.vectors import cosine, dot, l2_norm
+from wc_vector_indexing_spark.functions.vectors import cosine_to, dot_to
 
 DEFAULT_LSH_BITS = 8
 
@@ -47,23 +51,16 @@ def knn_exact(
 
     Deterministic tiebreak on id so results are stable across runs.
     Plan shape: Scan → Project(score) → TakeOrderedAndProject(k).
-    The query norm is folded to a Python float so each row evaluates one
-    dot fold + one row-norm fold (not a third fold over the literal).
+    The score is one SQL expression (``vectors.cosine_to``) that Spark
+    parses on the JVM: building it per literal, cast and lambda from
+    Python cost about 150 py4j round trips, most of a warm query's
+    driver time. A zero query scores every row 0 without reading the
+    vectors.
     """
-    import math
-
-    q = F.array(*[F.lit(float(x)) for x in query_vector])
-    qnorm = math.sqrt(sum(float(x) * float(x) for x in query_vector))
-    if qnorm == 0.0:
-        scored = index.withColumn("score", F.lit(0.0))
-    else:
-        denom = l2_norm(F.col(vec_col)) * F.lit(qnorm)
-        scored = index.withColumn(
-            "score",
-            F.when(denom == 0.0, F.lit(0.0)).otherwise(dot(F.col(vec_col), q) / denom),
-        )
+    zero = not any(float(x) * float(x) for x in query_vector)
+    score = F.lit(0.0) if zero else cosine_to(vec_col, query_vector)
     return (
-        scored.select(id_col, "score")
+        index.select(id_col, score.alias("score"))
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
     )
@@ -356,8 +353,7 @@ def lsh_signature(
     planes = _hyperplanes(dim, bits, seed)
     sig = F.lit(0).cast("long")
     for b, plane in enumerate(planes):
-        h = F.array(*[F.lit(x) for x in plane])
-        bit = (dot(F.col(vec_col), h) > 0).cast("long")
+        bit = (dot_to(vec_col, plane) > 0).cast("long")
         sig = sig + F.shiftleft(bit, b)
     return df.withColumn("bucket", sig)
 
@@ -394,10 +390,4 @@ def knn_lsh(
 
     bucketed = lsh_signature(index, vec_col, dim, bits, seed)
     pruned = bucketed.filter(F.col("bucket").isin([int(p) for p in probes]))
-    q = F.array(*[F.lit(float(x)) for x in query_vector])
-    return (
-        pruned.withColumn("score", cosine(F.col(vec_col), q))
-        .select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return knn_exact(pruned, query_vector, k, vec_col, id_col)

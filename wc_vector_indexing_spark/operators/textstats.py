@@ -566,7 +566,7 @@ def quality_gate_col(
         F.array(*[F.lit(v) for _, v in items]),
     )
     fallback = max(thresholds.values()) if default is None else default
-    thr = F.coalesce(lut.getItem(g), F.lit(fallback))
+    thr = F.coalesce(lut[g], F.lit(fallback))
     score = (
         F.col(score_col)
         if score_col

@@ -30,8 +30,10 @@ unigram tokenizer's convention, kept deliberately distinct).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from wc_vector_indexing_spark.operators.bpe import word_counts
 
@@ -209,13 +211,10 @@ def wordpiece_encode_col(
     ``text_col`` (array<string>). The vocab set broadcasts in the
     closure — no shuffle, no per-row python round-trip. Normalization
     matches the trainer's word_counts contract (lower + split)."""
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
     vset = set(vocab)
 
-    @pandas_udf("array<string>", PandasUDFType.SCALAR)
-    def enc(texts):
+    @pandas_udf("array<string>")
+    def enc(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts:
             pieces: list[str] = []

@@ -4533,7 +4533,7 @@ def hybrid_search_rrf_op(spark: SparkSession, sf: str) -> DataFrame:
     combiner. Both candidate lists round scores to 4dp BEFORE ranking
     (with an id tiebreak) so rank assignment is engine-portable; the
     fusion itself joins two 20-row frames."""
-    from wc_vector_indexing_spark.functions.vectors import cosine
+    from wc_vector_indexing_spark.functions.vectors import cosine_to
     from wc_vector_indexing_spark.operators.retrieval import bm25_search, rrf_fuse
 
     docs = load(spark, "documents", sf)
@@ -4543,7 +4543,7 @@ def hybrid_search_rrf_op(spark: SparkSession, sf: str) -> DataFrame:
     vec = (
         emb.select(
             F.col("vec_id").alias("doc_id"),
-            F.round(cosine(F.lit(qv), "embedding"), 4).alias("score"),
+            F.round(cosine_to("embedding", qv), 4).alias("score"),
         )
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(20)

@@ -31,21 +31,31 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# Lazy-frame memo, keyed by (session, dir, table): building the scan
-# frame costs 115-215 ms of driver-side work per call (parquet schema
-# inference + FS setup + py4j), and a catalog run calls load() for the
-# same handful of tables hundreds of times. The memoized value is the
-# UNMATERIALIZED scan DataFrame — no rows, no results, no cross-process
-# state: every action still computes from the parquet files, and a new
-# session (new key) re-infers from scratch.
-_LOAD_MEMO: dict = {}
+# Lazy-frame memo of ONE session, keyed by (dir, table): building the
+# scan frame costs 115-215 ms of driver-side work per call (parquet
+# schema inference + FS setup + py4j), and a catalog run calls load()
+# for the same handful of tables hundreds of times. The memoized value
+# is the UNMATERIALIZED scan DataFrame — no rows, no results, no
+# cross-process state: every action still computes from the parquet
+# files. A frame holds its session, so a load() from another session
+# drops every frame of the previous one (re-inferring from scratch)
+# rather than keep a stopped or replaced session alive.
+_load_memo: tuple[SparkSession | None, dict] = (None, {})
 
 
 def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
+    """The scan frame of table ``name`` under ``sf_dir``, memoized per
+    session. The datasets are static: a table's files must not change
+    while a session uses them, since a hit reuses the file listing and
+    schema of the first load()."""
+    global _load_memo
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; known: {TABLES}")
-    key = (spark, os.path.realpath(sf_dir), name)
-    memo = _LOAD_MEMO.get(key)
+    if _load_memo[0] is not spark:
+        _load_memo = (spark, {})
+    frames = _load_memo[1]
+    key = (os.path.realpath(sf_dir), name)
+    memo = frames.get(key)
     if memo is not None:
         return memo
     # Defensive session confs: the caller may hand us a session built
@@ -70,7 +80,7 @@ def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFr
             # Session tz is UTC, so the cast is value-identity — the
             # same wall-clock contract the DuckDB oracle assumes.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _LOAD_MEMO[key] = df
+    frames[key] = df
     return df
 
 

@@ -39,6 +39,16 @@ them at once and still publish in a fixed order (the sync tick:
 ``delta_sync``). Vacuum is reference-counted: a data dir survives as
 long as ANY retained or leased manifest references a file inside it.
 
+``read()`` of the live snapshot keeps its scan frame as one (version,
+frame) entry per store, since building it (manifest, file list, schema)
+costs about as much driver time as a small query: the sync tick's
+queries read the snapshot it just wrote several times. Snapshot files
+are immutable, so a frame stays valid for its version. Every read
+re-reads ``_LATEST`` and uses the entry only if it names the same
+version, so a publish by another store object on the same root is seen;
+a publish by this one drops the entry; a hit leases the version again;
+``read(version=...)`` of any other version scans afresh.
+
 ``merge`` takes Delta-style clauses — delete keys (WHEN MATCHED
 DELETE), updates (WHEN MATCHED UPDATE / NOT MATCHED INSERT), touch keys
 with assignments (WHEN MATCHED UPDATE SET) — as one bucket rewrite and
@@ -154,6 +164,8 @@ class ParquetMergeStore:
         # there is one driver; cross-driver retention is a Delta/Iceberg
         # concern, not this store's.
         self._leased: set[int] = set()
+        # (version, scan frame) of the last live-snapshot read(); see read()
+        self._live: tuple[int, DataFrame] | None = None
         os.makedirs(root, exist_ok=True)
 
     # -- snapshot plumbing -------------------------------------------------
@@ -246,6 +258,7 @@ class ParquetMergeStore:
         with os.fdopen(fd, "w") as f:
             f.write(str(v))
         os.replace(tmp, self._latest_path())  # atomic on POSIX
+        self._live = None
         self._vacuum(keep=3)
         return v
 
@@ -318,14 +331,23 @@ class ParquetMergeStore:
         snapshots first-class, since their files are immutable and
         vacuum refcounts keep every referenced data dir alive. Reading
         a version leases it, protecting it from vacuum until
-        release_leases()."""
+        release_leases().
+
+        A read of the live snapshot returns the frame of the last one
+        while ``_LATEST`` still names its version (module docstring)."""
         v = self.current_version() if version is None else version
+        if self._live is not None and self._live[0] == v:
+            self._leased.add(v)
+            return self._live[1]
         if v and version is not None and not os.path.isdir(self._version_dir(v)):
             raise ValueError(
                 f"version {v} not retained (vacuum keeps the newest 3 "
                 "plus leased snapshots)"
             )
-        return self._scan(v)
+        df = self._scan(v)
+        if version is None:
+            self._live = (v, df)
+        return df
 
     def versions(self) -> list[int]:
         """Retained snapshot versions, oldest first (≙ DESCRIBE HISTORY)."""
