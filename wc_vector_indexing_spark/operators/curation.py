@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wc_vector_indexing_spark.functions.hashing import sha_text
+from wc_vector_indexing_spark.functions.proxies import releases_proxies
 from wc_vector_indexing_spark.functions.threads import run_concurrently
 from wc_vector_indexing_spark.operators import dedup, textstats
 
@@ -113,6 +114,7 @@ class CurationResult:
         self._cached = ()
 
 
+@releases_proxies
 def curate(
     docs: DataFrame,
     config: CurationConfig | None = None,

@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from wc_vector_indexing_spark.config import EngineConfig, VALID_TARGETS
+from wc_vector_indexing_spark.functions.proxies import releases_proxies
 from wc_vector_indexing_spark.functions.threads import run_concurrently
 from wc_vector_indexing_spark.operators.embed import EmbeddingBackend, embed_texts
 from wc_vector_indexing_spark.operators.indexer import attach_payload
@@ -298,6 +299,7 @@ def apply_sync(
     )
 
 
+@releases_proxies
 def delete_products(
     product_ids: list[int],
     state: ParquetMergeStore,
@@ -344,6 +346,7 @@ def purge_site(
     return n
 
 
+@releases_proxies
 def sync_products(
     products: DataFrame,
     state: ParquetMergeStore,

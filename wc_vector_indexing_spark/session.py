@@ -68,7 +68,15 @@ def get_spark(
         )
     )
     if not os.environ.get("SPARK_GRAFT_CLUSTER"):
-        b = b.master(f"local[{cpus}]")
+        # local[N] runs the tasks in the driver's heap, where Spark sizes
+        # a memory page as the execution pool / cores / 16 (32 MB for a
+        # 2 GB driver at local[2]). Every sort, aggregation map and
+        # Arrow-UDF input queue takes at least one page, however few rows
+        # it holds, and a Python UDF's input queue stays reachable until
+        # its worker's monitor thread next wakes (every 2 s): 64 MB of
+        # driver heap pinned after a two-task Arrow-UDF stage. Small pages
+        # keep that to a few MB.
+        b = b.master(f"local[{cpus}]").config("spark.buffer.pageSize", "2m")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
